@@ -29,8 +29,10 @@ def connected_components(
     """(id, cluster_id) for every vertex appearing in ``edges``.
 
     cluster_id = min vertex id of the component (ids: any orderable type).
-    Converges in O(log n) rounds for typical dup clusters (small diameter);
-    ``max_iter`` bounds pathological chains.
+    Min-label propagation moves a label one hop per round, so it needs as
+    many rounds as the widest component's diameter; raises RuntimeError
+    if labels still change after ``max_iter`` rounds rather than return a
+    component split into several labels.
     """
     # Symmetrize with ONE pass over ``edges`` (r6): the old
     # union(select(u,v), select(v,u)) referenced the edge subtree TWICE, so
@@ -104,6 +106,12 @@ def connected_components(
                 break
         else:
             labels = new_labels.drop("_prev")
+    else:
+        # the last round (always a checkpointed check) still changed labels
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds; a component's diameter exceeds the round budget"
+        )
     return labels
 
 

@@ -25,7 +25,6 @@ class DedupConfig:
 
     # --- shingling (k_shingles.h) ---
     k: int = 5                    # sliding window size [k_shingles.h:67-85]
-    shingle_mode: str = "char"    # "char" (k_shingles) | "word" (test.h word sets)
 
     # --- minhash (minhash.h) ---
     n_perm: int = 128             # n_permutation default [minhash.h:85]
@@ -80,7 +79,6 @@ class DedupConfig:
     run_id: str = "run0"
     checkpoint_dir: Optional[str] = None
     shuffle_partitions: int = 32
-    arrow_batch: int = 2048
 
     def resolved(self, optimal) -> "DedupConfig":
         """Fill (b, r) via the optimizer if unset; returns a new config."""

@@ -43,8 +43,8 @@ class DedupResult:
     extra: dict = field(default_factory=dict)
 
     def unpersist(self) -> None:
-        """Release every DataFrame the pipeline persisted (signatures,
-        sized buckets, candidates).  Call after materializing the outputs —
+        """Release every DataFrame the pipeline persisted (stage
+        boundaries, caches).  Call after materializing the outputs —
         long-lived sessions that run the pipeline repeatedly (bench, the
         driver) leak executor storage otherwise."""
         for df in self.extra.get("persisted", []):
@@ -63,107 +63,72 @@ def dedup_pipeline(
 
     ``df`` needs (id_col, text_col[, phash_col]); any other columns
     (e.g. the fat ``bytes`` column) are pruned immediately.
+
+    Both modes cut the same six stage boundaries: ``reps``,
+    ``exact_edges``, ``signatures`` (plus the simhash column, if verify
+    uses it), ``candidates``, ``verified`` and ``clusters`` — parquet
+    stages through ``StageRunner`` when ``cfg.checkpoint_dir`` is set,
+    persisted frames otherwise (released by ``DedupResult.unpersist``).
+
+    Building the result is not lazy: in memory, candidate generation runs
+    one action up front (the ``sized`` bucket count), and in both modes
+    connected components' eager local checkpoints evaluate every stage.
     """
     cfg = cfg.resolved(optimal_params)
-    use_phash = phash_col is not None and cfg.use_phash and phash_col in df.columns
-    narrow_cols = [id_col, text_col] + ([phash_col] if use_phash else [])
-    narrow = df.select(*narrow_cols)
+    pcol = phash_col if cfg.use_phash and phash_col in df.columns else None
+    simhash_col = "simhash" if cfg.verify_mode == "exact+simhash" else None
+    key_cols = [text_col] + ([pcol] if pcol else [])
+    narrow = df.select(id_col, *key_cols)
 
     runner = StageRunner(spark, cfg) if cfg.checkpoint_dir else None
     persisted: list = []
 
-    def run(name, fn):
-        return runner.stage(name, fn) if runner else fn()
+    def stage(name, fn):
+        if runner:
+            return runner.stage(name, fn)
+        out = fn().persist()
+        persisted.append(out)
+        return out
 
-    # 1. exact-duplicate collapse (scale safeguard; lsh.py docstring).
-    # Non-runner path persists the shared window frame so reps (consumed
-    # via the signature cache early) and member_edges (consumed by CC
-    # late) don't each pay the content-key shuffle + window.
-    key_cols = [text_col] + ([phash_col] if use_phash else [])
-    if runner:
-        reps = runner.stage("reps", lambda: exact_dup_groups(narrow, id_col, key_cols)[0])
-        exact_edges = runner.stage(
-            "exact_edges", lambda: exact_dup_groups(narrow, id_col, key_cols)[1]
-        )
-    else:
-        reps, exact_edges = exact_dup_groups(
-            narrow, id_col, key_cols, persisted=persisted
-        )
+    # 1. exact-dup collapse (lsh.py docstring).  Only in memory is the shared
+    # window frame cached: with a runner a cache made reps 16 parquet files
+    # instead of 1 and cost more task CPU than computing the window twice.
+    reps_df, edges_df = exact_dup_groups(
+        narrow, id_col, key_cols, persisted=None if runner else persisted)
+    reps = stage("reps", lambda: reps_df)
+    exact_edges = stage("exact_edges", lambda: edges_df)
 
-    # 2. signatures (narrow map, fused shingle+minhash UDF)
-    signed = run(
-        "signatures",
-        lambda: add_signatures(reps, cfg, text_col=text_col,
-                               phash_col=phash_col if use_phash else "_none_"),
-    )
-    if cfg.verify_mode == "exact+simhash":
-        signed = signed.withColumn("simhash", simhash_udf(cfg)(F.col(text_col)))
-    if not runner:
-        # signed is consumed by banding AND twice by verify-enrich; persist
-        # so the signature UDF runs exactly once per row (the checkpointed
-        # path gets this from the parquet stage boundary instead)
-        signed = signed.persist()
-        persisted.append(signed)
+    # 2. signatures (fused shingle+minhash UDF, once per row)
+    def _signatures():
+        out = add_signatures(reps, cfg, text_col=text_col, phash_col=pcol or "_none_")
+        if simhash_col:
+            out = out.withColumn(simhash_col, simhash_udf(cfg)(F.col(text_col)))
+        return out
 
-    # 3. band explode → candidate pairs (the LSH "join")
+    signed = stage("signatures", _signatures)
+
+    # 3. band explode → candidate pairs; a runner skips the eager count,
+    # which on resume would rescan the input
     buckets = explode_bands(signed, id_col, "sig", cfg)
-    cand_holder = {}
+    pairs, skew = candidate_pairs(
+        buckets, id_col, cfg, persisted=persisted, eager=not runner)
+    candidates = stage("candidates", lambda: pairs)
 
-    def _cands():
-        pairs, skew = candidate_pairs(
-            buckets, id_col, cfg, persisted=persisted, eager=not runner
-        )
-        cand_holder["skew"] = skew
-        return pairs
-
-    candidates = run("candidates", _cands)
-    if not runner:
-        # Persisted for the verify probe (timed) and the skew/result
-        # consumers (untimed).  No eager count here: since the CC
-        # symmetrization reads the edge list in ONE pass (cluster.py), the
-        # timed path has a single consumer chain through verify, so the
-        # cache materializes exactly once without a barrier.  (The sized
-        # frame above DOES need its eager materialization — the self-join
-        # consumes it from two concurrent branches.)
-        candidates = candidates.persist()
-        persisted.append(candidates)
-    skew = cand_holder.get("skew")
-    if skew is None:  # resumed: recompute report definition lazily
-        _, skew = candidate_pairs(buckets, id_col, cfg, persisted=persisted)
-
-    # 4. verify
-    verified = run(
-        "verified",
-        lambda: verify_pairs(
-            candidates,
-            signed,
-            cfg,
-            id_col=id_col,
-            text_col=text_col,
-            phash_col=phash_col if use_phash else None,
-            simhash_col="simhash" if cfg.verify_mode == "exact+simhash" else None,
-        ),
-    )
+    # 4. verify; is_dup is filtered above the boundary (see verify.py)
+    verified = stage("verified", lambda: verify_pairs(
+        candidates, signed, cfg, id_col=id_col, text_col=text_col,
+        phash_col=pcol, simhash_col=simhash_col))
     dup_pairs = verified.filter(F.col("is_dup"))
 
     # 5. connected components over (exact-dup edges ∪ verified rep pairs)
     edges = dup_pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(exact_edges.select("src", "dst"))
-    clusters = run(
-        "clusters",
-        lambda: assign_clusters(narrow, edges, id_col=id_col),
-    )
+    clusters = stage("clusters", lambda: assign_clusters(narrow, edges, id_col=id_col))
 
-    extra = {"runner": runner, "persisted": persisted}
-    return DedupResult(
-        clusters=clusters,
-        dup_pairs=dup_pairs,
-        candidates=candidates,
-        skew_report=skew,
-        cfg=cfg,
-        extra=extra,
-    )
+    return DedupResult(clusters=clusters, dup_pairs=dup_pairs, candidates=candidates,
+                       skew_report=skew, cfg=cfg,
+                       extra={"runner": runner, "persisted": persisted})
 
 
 def dup_pairs_brute_force(

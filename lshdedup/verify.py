@@ -156,6 +156,11 @@ def verify_pairs(
     # pair (values identical; multiplicity bounded by bucket_cap).  The
     # LCS screen needs the gram intersection INSIDE the prefilter, so
     # that configuration keeps the per-doc precompute shape.
+    # The deferral holds only if callers filter ``is_dup`` above a stage
+    # boundary (dedup_pipeline's ``verified``): a filter straight on this
+    # frame is pushed into the enrich join's condition, which then inlines
+    # the shingle transform once per reference, for every candidate.
+    # Pinned by test_pipeline.py::test_dup_pairs_plan_keeps_shingles_out_of_joins.
     # Exact Jaccard on 64-bit-hashed shingles equals string-set Jaccard up
     # to negligible collisions, and |A∪B| = |A|+|B|−|A∩B| means the union
     # array is never materialized (unchanged from r4).

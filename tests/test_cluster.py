@@ -1,6 +1,7 @@
 """Connected-components semantics (replacement for the reference's greedy
 star clustering, dna_benchmark.h:361-417; SURVEY §2.6)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from lshdedup.cluster import assign_clusters, cluster_sizes, connected_components
@@ -22,6 +23,19 @@ def test_long_chain_converges(spark):
     got = connected_components(edges, max_iter=64).collect()
     assert {r["cluster_id"] for r in got} == {"v000"}
     assert len(got) == n + 1
+
+
+def test_long_path_raises_instead_of_splitting(spark):
+    """An 80-node path needs 79 hops: the default 50 rounds must fail
+    loudly (it used to return 29 labels), and enough rounds give one."""
+    edges = spark.createDataFrame(
+        [(f"v{i:03d}", f"v{i+1:03d}") for i in range(79)], ["src", "dst"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges)
+    got = connected_components(edges, max_iter=128).collect()
+    assert {r["cluster_id"] for r in got} == {"v000"}
+    assert len(got) == 80
 
 
 def test_partitioning_determinism(spark):

@@ -93,27 +93,34 @@ def test_determinism_under_partitioning(spark, corpus):
 
 def test_checkpoint_resume(spark, tmp_path):
     """Rerun with same run_id: stages resumed, identical clusters
-    (SURVEY §5.2 item 4)."""
+    (SURVEY §5.2 item 4); the checkpointed run cuts the pipeline's six
+    stages in order and clusters exactly like the in-memory run."""
     import dataclasses
 
     scfg = SynthConfig(n_rows=120)
     df = synth_corpus(spark, scfg).cache()
     df.count()
     cfg = dataclasses.replace(CFG, checkpoint_dir=str(tmp_path), run_id="resume_test")
+    stages = ["reps", "exact_edges", "signatures", "candidates", "verified", "clusters"]
     r1 = dedup_pipeline(spark, df, cfg)
     c1 = {(r["image_id"], r["cluster_id"]) for r in r1.clusters.collect()}
-    ev1 = [e for e in r1.extra["runner"].events if not e.get("resumed")]
-    assert len(ev1) >= 5  # all stages computed
+    ev1 = r1.extra["runner"].events
+    assert [e["stage"] for e in ev1] == stages
+    assert not any(e["resumed"] for e in ev1)  # all stages computed
 
     r2 = dedup_pipeline(spark, df, cfg)
     c2 = {(r["image_id"], r["cluster_id"]) for r in r2.clusters.collect()}
-    ev2 = [e for e in r2.extra["runner"].events if e.get("resumed")]
-    assert len(ev2) >= 5  # all stages resumed, nothing recomputed
+    ev2 = r2.extra["runner"].events
+    assert [e["stage"] for e in ev2] == stages
+    assert all(e["resumed"] for e in ev2)  # all resumed, nothing recomputed
     assert c1 == c2
+
+    mem = dedup_pipeline(spark, df, CFG)
+    assert {(r["image_id"], r["cluster_id"]) for r in mem.clusters.collect()} == c1
+    mem.unpersist()
     # metrics/lineage table exists and covers every stage
     mdf = r1.extra["runner"].metrics_df()
-    stages = {r["stage"] for r in mdf.collect()}
-    assert {"signatures", "candidates", "verified", "clusters"} <= stages
+    assert {r["stage"] for r in mdf.collect()} == set(stages)
     df.unpersist()
 
 
@@ -159,6 +166,15 @@ def test_skew_report_and_bytes_pruned(spark, result, tmp_path):
     for schema in schemas:
         assert "bytes" not in schema, schema
         assert "fmt" not in schema, schema  # only id/caption/phash travel
+
+
+def test_dup_pairs_plan_keeps_shingles_out_of_joins(result):
+    """verify defers shingle derivation past its prefilter; that holds only
+    if no join condition in the plan dup_pairs runs inlines the shingle
+    transform (an is_dup filter pushed into the enrich join does)."""
+    plan = result.dup_pairs._jdf.queryExecution().optimizedPlan().toString()
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert not [line for line in joins if "transform(" in line]
 
 
 # ------------------- OPH (scale-path signature scheme) -------------------
