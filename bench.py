@@ -388,11 +388,12 @@ def run_scaling_interleaved(
 
     The sequential pair (run_scaling) divides two walls measured 30-50 min
     apart on a host whose delivered throughput swings ±40% at ~10-s to
-    ~10-min timescales (BASELINE.md; .probe_watch_r5.log shows >=0.85
-    headroom readings never persisting across even two back-to-back ~10-s
-    probes).  This variant applies the method that settled the round-4
-    regression question (bench.py --ab): INTERLEAVE the two parallelism
-    levels chunk-by-chunk so both sample the same host windows.
+    ~10-min timescales (BASELINE.md; `git show b34dace:.probe_watch_r5.log`
+    shows >=0.85 headroom readings never persisting across even two
+    back-to-back ~10-s probes).  This variant applies the method that
+    settled the round-4 regression question (bench.py --ab): INTERLEAVE the
+    two parallelism levels chunk-by-chunk so both sample the same host
+    windows.
 
     Mechanics: the corpus (block-aligned id ranges, so planted dup groups
     never straddle a chunk) is served to TWO persistent workers — one

@@ -1,13 +1,12 @@
-"""Extra (non-frozen) benchmarks — stage-resolved profiling per guide §1.
+"""Extra (non-frozen) benchmarks beside the frozen bench.py.
 
-The frozen bench.py times whole queries; this file isolates each stage of
-the flagship image_dedup pipeline with noop sinks (guide §1.4) and labeled
-jobs (§1.5) so optimization targets the operator that actually burns the
-time.  Numbers here feed OPTIMIZATION_r06.md; the driver's measurement
-still runs the round-start bench.py.
+--queries isolates the non-pipeline bench queries with noop sinks and
+labeled jobs; --pipeline-repeat times the flagship pipeline several times
+in one warm JVM.  Per-layer pipeline numbers come from the run itself:
+``python3 perfbench/run.py --trace 1``.
 
-usage: python bench_extra.py --stages [n_images]
-       python bench_extra.py --queries          # per-bench-query isolation
+usage: python bench_extra.py --queries          # per-bench-query isolation
+       python bench_extra.py --pipeline-repeat [n_images] [reps]
 """
 
 from __future__ import annotations
@@ -22,82 +21,6 @@ from pyspark.sql import functions as F
 
 def _noop(df):
     df.write.format("noop").mode("overwrite").save()
-
-
-def stage_profile(n_images: int = 20_000, cpus: int = 32) -> dict:
-    from lshdedup.config import DedupConfig
-    from lshdedup.lsh import candidate_pairs, exact_dup_groups, explode_bands
-    from lshdedup.minhash import add_signatures
-    from lshdedup.cluster import assign_clusters
-    from lshdedup.params import optimal_params
-    from lshdedup.session import get_spark
-    from lshdedup.synth import SynthConfig, synth_corpus
-    from lshdedup.verify import verify_pairs
-
-    spark = get_spark(
-        app_name="lshdedup-stage-profile",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    corpus = synth_corpus(
-        spark, SynthConfig(n_rows=n_images), partitions=max(cpus * 2, 8)
-    ).persist()
-    corpus.count()
-
-    cfg = DedupConfig(
-        threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
-        shuffle_partitions=max(cpus, 16), sig_scheme="oph",
-    ).resolved(optimal_params)
-    t: dict[str, float] = {}
-
-    def timed(name, fn):
-        sc.setJobDescription(name)
-        t0 = time.perf_counter()
-        out = fn()
-        t[name] = round(time.perf_counter() - t0, 3)
-        sc.setJobDescription(None)
-        return out
-
-    narrow = corpus.select("image_id", "caption", "phash")
-
-    # 1. exact-dup collapse
-    reps, exact_edges = exact_dup_groups(narrow, "image_id", ["caption", "phash"])
-    reps = timed("1_exact_dup_reps", lambda: reps.persist())
-    timed("1a_exact_dup_materialize", lambda: _noop(reps))
-    timed("1b_exact_edges", lambda: _noop(exact_edges))
-
-    # 2. signatures
-    signed = add_signatures(reps, cfg, text_col="caption", phash_col="phash").persist()
-    timed("2_signatures", lambda: _noop(signed))
-
-    # 3. banding + bucket sizing + self-join
-    buckets = explode_bands(signed, "image_id", "sig", cfg)
-    timed("3_band_explode", lambda: _noop(buckets))
-    pairs, skew = candidate_pairs(buckets, "image_id", cfg)
-    pairs = pairs.persist()
-    timed("4_candidate_pairs", lambda: _noop(pairs))
-    timed("4a_skew_report", lambda: skew.count())
-
-    # 5. verify
-    verified = verify_pairs(
-        pairs, signed, cfg, id_col="image_id", text_col="caption",
-        phash_col="phash",
-    )
-    timed("5_verify", lambda: _noop(verified))
-    dup_pairs = verified.filter(F.col("is_dup"))
-
-    # 6. connected components + final assignment
-    edges = dup_pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(exact_edges.select("src", "dst"))
-    clusters = assign_clusters(narrow, edges, id_col="image_id")
-    timed("6_cc_clusters", lambda: clusters.select("cluster_id").distinct().count())
-
-    t["total_staged"] = round(sum(v for k, v in t.items() if k != "total_staged"), 3)
-    spark.stop()
-    return t
 
 
 def query_profile(sf_dir: str, cpus: int = 32) -> dict:
@@ -213,16 +136,16 @@ def pipeline_repeat(n_images: int, reps: int, cpus: int) -> dict:
 
 
 if __name__ == "__main__":
-    mode = sys.argv[1] if len(sys.argv) > 1 else "--stages"
+    mode = sys.argv[1] if len(sys.argv) > 1 else None
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if mode == "--stages":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
-        print(json.dumps(stage_profile(n, cpus)))
-    elif mode == "--queries":
+    if mode == "--queries":
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         print(json.dumps(query_profile(sf_dir, cpus)))
     elif mode == "--pipeline-repeat":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 4
         print(json.dumps(pipeline_repeat(n, reps, cpus)))
+    else:
+        print(__doc__[__doc__.index("usage:"):].strip(), file=sys.stderr)
+        sys.exit(2)
     sys.stdout.flush()

@@ -2,15 +2,15 @@
 (graft extras; NOT in the reference — its cosine-LSH header is an
 unimplemented TODO, lsh_cosine_similarity.h:1-23).
 
-Two paths:
-  * brute-force cosine top-k — the small-scale baseline/oracle: a join +
-    native fold expressions (sequential accumulation → bit-stable against
-    a sequential SQL oracle);
-  * random-hyperplane (SRP/SimHash) bucketed search — the scale path:
-    embeddings → sign-bit signatures (vectorized numpy matmul against a
-    seeded hyperplane matrix regenerated per executor), multi-probe
-    band buckets → candidate join → exact re-rank.  Bucket join replaces
-    the O(n·q) cross product exactly as MinHash-LSH replaces all-pairs.
+Every top-k path generates candidates, then returns through ONE re-rank
+core, ``_rerank_topk``: exact rounded cosine on pre-computed row norms →
+optional (qid, cid) dedup → row_number top-k.  Candidates come from a
+brute-force cross product (the small-scale baseline/oracle; native fold
+expressions, bit-stable against a sequential SQL oracle), random-
+hyperplane (SRP/SimHash) band buckets (vectorized numpy sign bits, then a
+band equi-join that replaces the O(n·q) cross product exactly as
+MinHash-LSH replaces all-pairs), or IVF coarse cells (k-means or
+seeded-row quantizer; in memory or from a cell-partitioned index at rest).
 """
 
 from __future__ import annotations
@@ -22,7 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
+
+from lshdedup.util import fan_out
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -55,6 +57,39 @@ def cosine_prenorm_expr(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot_expr(a, b) / denom)
 
 
+def _cosine6(a: str, b: str, na: str, nb: str) -> Column:
+    """The rounded pre-normed cosine every ANN path scores with."""
+    return F.round(cosine_prenorm_expr(F.col(a), F.col(b), F.col(na), F.col(nb)), 6)
+
+
+def _top_n(df: DataFrame, part: str, score: str, tie: str, n: int, rank: str):
+    """Rows with the n highest ``score`` per ``part``; ties by ``tie``."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.col(tie))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _rerank_topk(
+    cands: DataFrame, k: int, qid: str, cid: str, qvec: str, cvec: str,
+    dedup: bool = False,
+) -> DataFrame:
+    """Score candidates carrying both vectors and the row norms ``_qn``/
+    ``_cn``; return the top-k per query, ties broken by neighbor id so
+    results are total-ordered and oracle-comparable.  ``dedup`` drops
+    repeated (qid, cid) pairs first, so row_number cannot count a
+    neighbor twice and evict a genuine top-k member."""
+    scored = (
+        cands.withColumn("cosine", _cosine6(qvec, cvec, "_qn", "_cn"))
+        # prune to the 3 output columns BEFORE the rank shuffle — no reason
+        # to move two dim-width vectors per candidate through the exchange
+        .select(qid, cid, "cosine")
+    )
+    if dedup:
+        scored = scored.dropDuplicates([qid, cid])
+    return _top_n(scored, qid, "cosine", cid, k, "rank").select(
+        qid, cid, "cosine", "rank"
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -65,28 +100,12 @@ def brute_force_topk(
     cvec: str = "cvec",
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast-joined cross product +
-    window rank.  O(|Q|·|C|) — baseline only; ties broken by neighbor id
-    so results are total-ordered and oracle-comparable.  Norms are
-    precomputed per ROW (cosine_prenorm_expr), not per pair."""
-    joined = (
-        queries.withColumn("_qn", norm_expr(F.col(qvec)))
-        .crossJoin(corpus.withColumn("_cn", norm_expr(F.col(cvec))))
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenorm_expr(
-                    F.col(qvec), F.col(cvec), F.col("_qn"), F.col("_cn")
-                ),
-                6,
-            ),
-        )
+    window rank.  O(|Q|·|C|) — baseline only.  Norms are precomputed per
+    ROW (cosine_prenorm_expr), not per pair."""
+    cands = queries.withColumn("_qn", norm_expr(F.col(qvec))).crossJoin(
+        corpus.withColumn("_cn", norm_expr(F.col(cvec)))
     )
-    w = Window.partitionBy(qid).orderBy(F.desc("cosine"), F.col(cid))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, cid, "cosine", "rank")
-    )
+    return _rerank_topk(cands, k, qid, cid, qvec, cvec)
 
 
 @lru_cache(maxsize=8)
@@ -140,6 +159,21 @@ def srp_bands_expr(sig: Column, n_bands: int = 8, bits_per_band: int = 8) -> Col
     )
 
 
+def _srp_band_rows(
+    df: DataFrame, id_col: str, vec_col: str, norm_name: str, sig_udf,
+    n_bands: int, bits_per_band: int,
+) -> DataFrame:
+    """One row per (vector, band): id, vector, its row norm as
+    ``norm_name``, band_id, band_hash."""
+    cols = [id_col, vec_col, norm_name]
+    return (
+        df.withColumn("_sig", sig_udf(F.col(vec_col)))
+        .withColumn(norm_name, norm_expr(F.col(vec_col)))
+        .select(*cols, F.explode(srp_bands_expr(F.col("_sig"), n_bands, bits_per_band)).alias("_b"))
+        .select(*cols, "_b.band_id", "_b.band_hash")
+    )
+
+
 def srp_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -162,36 +196,16 @@ def srp_topk(
     band join itself already redistributes across cores."""
     bits_per_band = n_bits // n_bands
     sig_udf = srp_signature_udf(dim, n_bits, seed)
-    qb = (
-        queries.withColumn("_sig", sig_udf(F.col(qvec)))
-        .withColumn("_qn", norm_expr(F.col(qvec)))
-        .select(qid, qvec, "_qn", F.explode(srp_bands_expr(F.col("_sig"), n_bands, bits_per_band)).alias("_b"))
-        .select(qid, qvec, "_qn", "_b.band_id", "_b.band_hash")
-    )
-    cb = (
-        corpus.withColumn("_sig", sig_udf(F.col(cvec)))
-        .withColumn("_cn", norm_expr(F.col(cvec)))
-        .select(cid, cvec, "_cn", F.explode(srp_bands_expr(F.col("_sig"), n_bands, bits_per_band)).alias("_b"))
-        .select(cid, cvec, "_cn", "_b.band_id", "_b.band_hash")
-    )
+    qb = _srp_band_rows(queries, qid, qvec, "_qn", sig_udf, n_bands, bits_per_band)
+    cb = _srp_band_rows(corpus, cid, cvec, "_cn", sig_udf, n_bands, bits_per_band)
+    # a pair can collide in up to n_bands bands: dedup BEFORE scoring so
+    # the cosine is evaluated once per pair, not once per shared band
     cands = (
         qb.join(cb, ["band_id", "band_hash"])
         .select(qid, qvec, "_qn", cid, cvec, "_cn")
         .dropDuplicates([qid, cid])
     )
-    scored = cands.withColumn(
-        "cosine",
-        F.round(
-            cosine_prenorm_expr(F.col(qvec), F.col(cvec), F.col("_qn"), F.col("_cn")),
-            6,
-        ),
-    )
-    w = Window.partitionBy(qid).orderBy(F.desc("cosine"), F.col(cid))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, cid, "cosine", "rank")
-    )
+    return _rerank_topk(cands, k, qid, cid, qvec, cvec)
 
 
 def train_ivf_centroids(
@@ -332,6 +346,22 @@ def ivf_cell_udf(centroids: np.ndarray, n_probe: int = 1):
     return cells
 
 
+def _corpus_cells(df: DataFrame, vec: str, cent: np.ndarray, spill: int) -> DataFrame:
+    """Each corpus row under its ``spill`` nearest cells (``_cell``)."""
+    assign = ivf_cell_udf(cent, spill)(F.col(vec))
+    # spill=1 keeps one row per corpus row (no generator in the plan)
+    cell = F.element_at(assign, 1) if spill == 1 else F.explode(assign)
+    return df.withColumn("_cell", cell)
+
+
+def _probe_cells(queries: DataFrame, qvec: str, cent: np.ndarray, n_probe: int) -> DataFrame:
+    """Each query, with its row norm ``_qn``, under its ``n_probe``
+    nearest cells (``_cell``)."""
+    return queries.withColumn("_qn", norm_expr(F.col(qvec))).withColumn(
+        "_cell", F.explode(ivf_cell_udf(cent, n_probe)(F.col(qvec)))
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -365,8 +395,6 @@ def ivf_topk(
     Cost at scale: index storage and candidate volume grow ~linearly in
     corpus_spill, and the (qid, cid) dedup adds one shuffle over the
     candidate set (the spill=1 path keeps the single-shuffle plan)."""
-    from lshdedup.util import fan_out
-
     queries, corpus = fan_out(queries), fan_out(corpus)
     try:
         cent = train_ivf_centroids(
@@ -386,45 +414,17 @@ def ivf_topk(
             .select(qid, cid, "cosine", "rank")
         )
     spill = max(1, min(int(corpus_spill), n_cells))
-    c_assign = ivf_cell_udf(cent, spill)
-    q_assign = ivf_cell_udf(cent, n_probe)
-    corpus = corpus.withColumn("_cn", norm_expr(F.col(cvec)))
-    queries = queries.withColumn("_qn", norm_expr(F.col(qvec)))
-    if spill == 1:
-        cb = corpus.withColumn("_cell", F.element_at(c_assign(F.col(cvec)), 1))
-    else:
-        cb = corpus.withColumn("_cell", F.explode(c_assign(F.col(cvec))))
-    qb = queries.withColumn("_cell", F.explode(q_assign(F.col(qvec))))
-    scored = (
-        qb.join(cb, "_cell")
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenorm_expr(
-                    F.col(qvec), F.col(cvec), F.col("_qn"), F.col("_cn")
-                ),
-                6,
-            ),
-        )
-        # prune to the 3 output columns BEFORE the rank shuffle — no reason
-        # to move two dim-width vectors per candidate through the exchange
-        .select(qid, cid, "cosine")
+    cb = _corpus_cells(
+        corpus.withColumn("_cn", norm_expr(F.col(cvec))), cvec, cent, spill
     )
-    if spill > 1:
-        # a pair can now collide in up to `spill` shared cells; one
-        # (qid, cid) shuffle dedupes before the rank window so row_number
-        # cannot count a neighbor twice and evict a genuine top-k member
-        scored = scored.dropDuplicates([qid, cid])
-    # else: a corpus row lives in exactly ONE cell and a query's probe
-    # cells are distinct, so (qid, cid) cannot repeat — the dedup would
-    # add a full extra shuffle over the candidate set for nothing
-    # (contrast srp_topk, where a pair CAN collide in many bands)
-    w = Window.partitionBy(qid).orderBy(F.desc("cosine"), F.col(cid))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, cid, "cosine", "rank")
-    )
+    qb = _probe_cells(queries, qvec, cent, n_probe)
+    # spill > 1: a pair can now collide in up to `spill` shared cells, so
+    # dedup before the rank window.  spill == 1: a corpus row lives in
+    # exactly ONE cell and a query's probe cells are distinct, so
+    # (qid, cid) cannot repeat — the dedup would add a full extra shuffle
+    # over the candidate set for nothing (contrast srp_topk, where a pair
+    # CAN collide in many bands)
+    return _rerank_topk(qb.join(cb, "_cell"), k, qid, cid, qvec, cvec, dedup=spill > 1)
 
 
 def ivf_topk_seeded(
@@ -456,8 +456,6 @@ def ivf_topk_seeded(
     # centroid pick: TakeOrderedAndProject (per-partition top-k, no global
     # Exchange), materialized ONCE driver-side (n_cells rows) so the two
     # crossJoin consumers below don't each recompute the corpus top-k
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     cent_rows = (
         corpus.select(
             F.col(cvec).alias("centv"),
@@ -476,62 +474,22 @@ def ivf_topk_seeded(
         StructType([StructField("cent_id", IntegerType(), False), vec_field]),
     ).withColumn("_centn", norm_expr(F.col("centv")))
     spill = max(1, min(int(corpus_spill), n_cells))
-    # norms hoisted per row / per centroid (cosine_prenorm_expr): the
-    # assignment crossJoins evaluated norm(centv) and norm(vec) once per
-    # (row, centroid) pair — n_cells + 1 redundant folds per row
-    corpus = corpus.withColumn("_cn", norm_expr(F.col(cvec)))
-    queries = queries.withColumn("_qn", norm_expr(F.col(qvec)))
-    sim = F.round(
-        cosine_prenorm_expr(
-            F.col(cvec), F.col("centv"), F.col("_cn"), F.col("_centn")
-        ),
-        6,
-    )
-    w_assign = Window.partitionBy(cid).orderBy(F.desc("_csim"), F.col("cent_id"))
-    cb = (
-        corpus.crossJoin(F.broadcast(cents))
-        .withColumn("_csim", sim)
-        .withColumn("_crank", F.row_number().over(w_assign))
-        .filter(F.col("_crank") <= spill)
-        .select(cid, cvec, "_cn", F.col("cent_id").alias("_cell"))
-    )
-    qsim = F.round(
-        cosine_prenorm_expr(
-            F.col(qvec), F.col("centv"), F.col("_qn"), F.col("_centn")
-        ),
-        6,
-    )
-    w_probe = Window.partitionBy(qid).orderBy(F.desc("_qsim"), F.col("cent_id"))
-    qb = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn("_qsim", qsim)
-        .withColumn("_qrank", F.row_number().over(w_probe))
-        .filter(F.col("_qrank") <= n_probe)
-        .select(qid, qvec, "_qn", F.col("cent_id").alias("_cell"))
-    )
-    scored = (
-        qb.join(cb, "_cell")
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenorm_expr(
-                    F.col(qvec), F.col(cvec), F.col("_qn"), F.col("_cn")
-                ),
-                6,
-            ),
-        )
-        .select(qid, cid, "cosine")
-    )
-    if spill > 1:
-        # same invariant break as ivf_topk: a pair is joinable through up
-        # to `spill` shared cells — dedup before the rank window
-        scored = scored.dropDuplicates([qid, cid])
-    w = Window.partitionBy(qid).orderBy(F.desc("cosine"), F.col(cid))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, cid, "cosine", "rank")
-    )
+
+    def nearest(df: DataFrame, id_: str, vec: str, norm: str, n: int):
+        # each row under its n highest-rounded-cosine centroids.  Norms
+        # hoisted per row / per centroid (cosine_prenorm_expr): the
+        # assignment crossJoin evaluated norm(centv) and norm(vec) once
+        # per (row, centroid) pair — n_cells + 1 redundant folds per row
+        df = df.withColumn(norm, norm_expr(F.col(vec))).crossJoin(F.broadcast(cents))
+        df = df.withColumn("_sim", _cosine6(vec, "centv", norm, "_centn"))
+        top = _top_n(df, id_, "_sim", "cent_id", n, "_r")
+        return top.select(id_, vec, norm, F.col("cent_id").alias("_cell"))
+
+    cb = nearest(corpus, cid, cvec, "_cn", spill)
+    qb = nearest(queries, qid, qvec, "_qn", n_probe)
+    # same invariant break as ivf_topk: at spill > 1 a pair is joinable
+    # through up to `spill` shared cells — dedup before the rank window
+    return _rerank_topk(qb.join(cb, "_cell"), k, qid, cid, qvec, cvec, dedup=spill > 1)
 
 
 def embedding_near_dup_pairs(
@@ -546,38 +504,22 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via SRP bucket self-join +
     exact verify — the embedding analogue of the MinHash dedup pipeline."""
-    from lshdedup.util import fan_out
-
     df = fan_out(df)
     bits_per_band = n_bits // n_bands
     sig_udf = srp_signature_udf(dim, n_bits, seed)
-    b = (
-        df.withColumn("_sig", sig_udf(F.col(vec_col)))
-        .withColumn("_n", norm_expr(F.col(vec_col)))
-        .select(id_col, vec_col, "_n", F.explode(srp_bands_expr(F.col("_sig"), n_bands, bits_per_band)).alias("_b"))
-        .select(id_col, vec_col, "_n", "_b.band_id", "_b.band_hash")
-    )
-    left = b.select(
-        "band_id", "band_hash", F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"), F.col("_n").alias("_na"),
-    )
-    right = b.select(
-        "band_id", "band_hash", F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"), F.col("_n").alias("_nb"),
+    b = _srp_band_rows(df, id_col, vec_col, "_n", sig_udf, n_bands, bits_per_band)
+    left, right = (
+        b.select(
+            "band_id", "band_hash", F.col(id_col).alias(f"id_{s}"),
+            F.col(vec_col).alias(f"_v{s}"), F.col("_n").alias(f"_n{s}"),
+        )
+        for s in "ab"
     )
     return (
         left.join(right, ["band_id", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenorm_expr(
-                    F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine6("_va", "_vb", "_na", "_nb"))
         .filter(F.col("cosine") >= min_cosine)
         .select("id_a", "id_b", "cosine")
     )
@@ -611,11 +553,7 @@ def write_ivf_index(
         corpus, cid, cvec, dim, n_cells, seed=seed, n_rows=n_rows
     )
     spill = max(1, min(int(corpus_spill), n_cells))
-    assign = ivf_cell_udf(cent, spill)
-    if spill == 1:
-        cb = corpus.withColumn("_cell", F.element_at(assign(F.col(cvec)), 1))
-    else:
-        cb = corpus.withColumn("_cell", F.explode(assign(F.col(cvec))))
+    cb = _corpus_cells(corpus, cvec, cent, spill)
     cb.write.mode("overwrite").partitionBy("_cell").parquet(f"{path}/corpus")
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(cent.shape[0])],
@@ -659,10 +597,7 @@ def ivf_topk_indexed(
         [r["centv"] for r in sorted(cent_rows, key=lambda r: r["cell_id"])],
         dtype=np.float64,
     )
-    q_assign = ivf_cell_udf(cent, n_probe)
-    qb = queries.withColumn("_qn", norm_expr(F.col(qvec))).withColumn(
-        "_cell", F.explode(q_assign(F.col(qvec)))
-    )
+    qb = _probe_cells(queries, qvec, cent, n_probe)
     # n_queries·n_probe values collapse to <= n_cells distinct cells: a
     # bounded driver intake that buys STATIC partition pruning (the scan
     # lists only the probed directories; no job touches the rest)
@@ -676,24 +611,7 @@ def ivf_topk_indexed(
         .filter(F.col("_cell").isin(cells))
         .withColumn("_cn", norm_expr(F.col(cvec)))
     )
-    scored = (
-        qb.join(cb, "_cell")
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenorm_expr(
-                    F.col(qvec), F.col(cvec), F.col("_qn"), F.col("_cn")
-                ),
-                6,
-            ),
-        )
-        .select(qid, cid, "cosine")
-    )
-    if int(meta["corpus_spill"]) > 1:
-        scored = scored.dropDuplicates([qid, cid])
-    w = Window.partitionBy(qid).orderBy(F.desc("cosine"), F.col(cid))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, cid, "cosine", "rank")
+    return _rerank_topk(
+        qb.join(cb, "_cell"), k, qid, cid, qvec, cvec,
+        dedup=int(meta["corpus_spill"]) > 1,
     )

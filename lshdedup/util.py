@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame
@@ -41,15 +40,13 @@ def fan_out(df: DataFrame, factor: int = 4) -> DataFrame:
     is naturally parallel and an unconditional repartition would shuffle
     the whole table for nothing.  The threshold derives from
     ``defaultParallelism`` (i.e. from the session master / core count),
-    never a hard-coded core count; LSHDEDUP_FANOUT=0 disables it.
+    never a hard-coded core count.
 
     Safety: the partition probe (``df.rdd``) would EXECUTE upstream query
     stages on a multi-stage adaptive plan, so it only runs when the
     analyzed plan is scan+project+filter shaped — on such plans it merely
     compiles, launching no job.  Anything wider is returned unchanged.
     """
-    if os.environ.get("LSHDEDUP_FANOUT", "1") == "0":
-        return df
     if not _is_plain_scan(df):
         return df
     sc = df.sparkSession.sparkContext

@@ -290,3 +290,40 @@ def test_ivf_index_at_rest_partition_pruned(spark, tmp_path):
             ).collect()
         }
         assert got == mem
+
+
+def test_rerank_dedup_only_where_pairs_can_repeat(spark):
+    """The re-rank core's (qid, cid) dedup is one Aggregate in the
+    optimized plan exactly where the candidate join can repeat a pair:
+    none for single-cell IVF (in-memory and seeded), one once corpus rows
+    spill into 2 cells, and one for SRP, whose pairs can collide in up to
+    n_bands bands."""
+    from pyspark.sql import functions as F
+    from test_entry_contract import SF_DIR
+
+    from lshdedup.ann import ivf_topk, ivf_topk_seeded
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    q = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qvec")
+    )
+    c = e.filter(F.col("vec_id") >= 10).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cvec")
+    )
+
+    def dedups(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("Aggregate [qid")
+
+    for spill in (1, 2):
+        ivf = ivf_topk(
+            q, c, k=5, dim=64, n_cells=8, n_probe=3, corpus_spill=spill
+        )
+        seeded = ivf_topk_seeded(
+            q, c, k=5, n_cells=16, n_probe=4, corpus_spill=spill
+        )
+        assert dedups(ivf) == spill - 1
+        assert dedups(seeded) == spill - 1
+    assert dedups(srp_topk(q, c, k=5, dim=64, n_bands=16)) == 1
