@@ -3,8 +3,9 @@
 Captures `explain("formatted")` for the pipeline's headline stages over a
 parquet source and checks the plan properties the 100 TB design relies on:
 column pruning reaching the scan (no `bytes`), whole-stage codegen around
-the band explode and verify expressions, shuffle (not broadcast) joins in
-the CC iteration, and AQE being active.
+the band explode and verify expressions, a hash-partitioned exchange
+feeding the connected-components contraction (never a broadcast or
+cartesian join in CC), and AQE being active.
 
 Run:  python jobs/plan_audit.py [out_md]
 """
@@ -66,17 +67,28 @@ def main(out_path: str = "PLANS.md") -> int:
         "generate/explode inside codegen — zero shuffles before the join.",
     ))
 
-    from lshdedup.cluster import connected_components
+    from lshdedup.cluster import connected_components, local_roots
 
+    # checkpointed edges keep the upstream verify joins out of the CC plans
     edges = res.dup_pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).limit(100)
-    comps = connected_components(edges, max_iter=1, checkpoint_every=10)
+    ).limit(100).localCheckpoint()
+    plan_contract = captured_explain(local_roots(edges))
     sections.append((
-        "Connected-components iteration join",
-        captured_explain(comps),
-        "Label-propagation join must be ShuffledHashJoin (hinted), never "
-        "BroadcastHashJoin: the labels table scales with the vertex count.",
+        "Connected components: partition-local union-find contraction",
+        plan_contract,
+        "One pass over the edges: canonical (least, greatest) pairs, one "
+        "hashpartitioning Exchange on the smaller endpoint feeding the "
+        "MapInArrow union-find kernel — no join of any kind.",
+    ))
+    plan_cc = captured_explain(connected_components(edges, max_iter=1))
+    sections.append((
+        "Connected components: labels",
+        plan_cc,
+        "The per-vertex min-root aggregate over the checkpointed contraction "
+        "(plus, when a component spans partitions, the star-round labels "
+        "join) — never BroadcastHashJoin, BroadcastNestedLoopJoin or "
+        "CartesianProduct: the labels scale with the vertex count.",
     ))
 
     # ---- round-2 operators: events + IVF ----
@@ -192,8 +204,21 @@ def main(out_path: str = "PLANS.md") -> int:
         for col in ("bytes", "fmt", "w", "h"):
             if col in cols:
                 problems.append(f"unpruned column {col!r} in scan: {schema}")
-    if "BroadcastHashJoin" in sections[2][1]:
-        problems.append("CC iteration join is broadcast")
+    for plan in (plan_contract, plan_cc):
+        for bad in ("BroadcastHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct"):
+            if bad in plan:
+                problems.append(f"connected-components plan contains {bad}")
+    # the kernel's child in the tree rendering must be the Exchange, and
+    # that Exchange must hash-partition on the smaller endpoint
+    feed = re.search(r"MapInArrow \(\d+\)\n\s*\+- Exchange \((\d+)\)", plan_contract)
+    if not feed or not re.search(
+        rf"\({feed.group(1)}\) Exchange\nInput \[\d+\]: \[[^\]]*\]\nArguments: hashpartitioning\(u#",
+        plan_contract,
+    ):
+        problems.append(
+            "CC contraction kernel is not fed by a hashpartitioning exchange "
+            "on the smaller endpoint"
+        )
     if plan_rollup:
         for schema in re.findall(r"ReadSchema: (struct<[^>]*>)", plan_rollup):
             for col in ("props", "user_id"):

@@ -10,7 +10,10 @@ Shuffle inventory (what the plan must look like at 100 TB):
                                count reuses the same partitioning
   3. verify enrich           — two joins pairs↔docs (docs side pruned to
                                id/sig/caption/phash only — never `bytes`)
-  4. CC iterations           — one shuffle per round on vertex id
+  4. connected components    — one shuffle on the smaller edge endpoint
+                               (partition-local union-find), one on vertex
+                               id (root check); three per star round, run
+                               only for components spanning partitions
 Everything else is narrow.  `bytes` is pruned at the first select and never
 travels past the scan (SURVEY §7.4).
 """

@@ -155,3 +155,19 @@ def test_band_expr_sql_equals_column_builder(spark):
     got = df.select("id", band_hashes_expr("sig", 8, 4).alias("bh")).collect()
     want = df.select("id", column_builder("sig", 8, 4).alias("bh")).collect()
     assert got == want
+
+
+def test_band_expr_quotes_backtick_column_name(spark):
+    """A backtick in the signature column's name is escaped, not
+    spliced into the SQL text: same band hashes as under a plain name."""
+    from lshdedup.lsh import band_hashes_expr
+
+    df = spark.range(20).select(
+        "id",
+        F.array(*[F.xxhash64(F.col("id"), F.lit(j)) for j in range(16)]).alias("sig"),
+    )
+    odd = "s`ig"
+    got = df.withColumnRenamed("sig", odd).select(
+        "id", band_hashes_expr(odd, 4, 4).alias("bh")).collect()
+    want = df.select("id", band_hashes_expr("sig", 4, 4).alias("bh")).collect()
+    assert got == want

@@ -56,6 +56,16 @@ def test_minhash_similarity_expr(spark):
     assert df.select(minhash_similarity_expr(F.col("a"), F.col("b")).alias("s")).first()["s"] == 0.5
 
 
+def test_minhash_similarity_expr_ragged_is_null(spark):
+    """Signatures of different lengths have no lane-wise estimate: NULL,
+    in either argument order, not a fraction over zip_with's padding."""
+    df = spark.createDataFrame(
+        [([1, 2, 3, 4], [1, 2, 3]), ([1, 2], [1, 2, 3, 4])], "a array<long>, b array<long>"
+    )
+    got = df.select(minhash_similarity_expr(F.col("a"), F.col("b")).alias("s")).collect()
+    assert [r["s"] for r in got] == [None, None]
+
+
 def test_word_set_estimate_m1_m2(spark, word_sets):
     """MinHash estimate ≈ exact Jaccard on the reference's word fixtures
     (test_min_hash, test.h:85-103), via the token-hash path."""
