@@ -155,7 +155,7 @@ def run_bench(sf_dir: str, cpus: int, n_images: int | None = None) -> dict:
     return {
         "metric": "images_per_sec_end_to_end",
         "value": round(images_per_sec, 2),
-        "unit": "sec",
+        "unit": "img/s",
         "queries": {k: round(v, 3) for k, v in queries.items()},
         "sf": sf_num,
         "n_images": n_actual,
@@ -416,6 +416,15 @@ def run_scaling_interleaved(
 
     from lshdedup.synth import SYNTH_SCHEMA_VERSION, SynthConfig
 
+    block = SynthConfig(n_rows=n_images).block
+    chunk_rows = (n_images // n_slices // block) * block
+    if chunk_rows == 0:
+        raise ValueError(
+            f"n_images={n_images} is too small for {n_slices} slices of "
+            f"{block}-row blocks (need at least {n_slices * block})"
+        )
+    bounds = [i * chunk_rows for i in range(n_slices)] + [n_images]
+
     fp = hashlib.sha256(
         json.dumps(
             {"cfg": asdict(SynthConfig(n_rows=n_images)),
@@ -428,10 +437,6 @@ def run_scaling_interleaved(
     )
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
         write_synth_corpus(n_images, corpus_path)
-
-    block = SynthConfig(n_rows=n_images).block
-    chunk_rows = (n_images // n_slices // block) * block
-    bounds = [i * chunk_rows for i in range(n_slices)] + [n_images]
 
     def _hw_probe() -> dict | None:
         if os.environ.get("LSHDEDUP_SKIP_PROBE"):

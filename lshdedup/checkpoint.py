@@ -20,12 +20,16 @@ import hashlib
 import json
 import os
 import time
+from dataclasses import asdict
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lshdedup.config import DedupConfig
+
+# where a run is stored, and a knob nothing reads: not in the fingerprint
+EXECUTION_FIELDS = ("run_id", "checkpoint_dir", "shuffle_partitions")
 
 
 class StageRunner:
@@ -39,8 +43,10 @@ class StageRunner:
         self.root = os.path.join(cfg.checkpoint_dir, cfg.run_id)
         os.makedirs(self.root, exist_ok=True)
         # stable across driver restarts (builtin hash() is per-process salted,
-        # which would defeat resume-after-kill)
-        digest = hashlib.sha256(cfg.to_json().encode("utf-8")).hexdigest()
+        # which would defeat resume-after-kill); covers only the fields that
+        # can change a stage's output, so a moved tree still resumes
+        fields = {k: v for k, v in asdict(cfg).items() if k not in EXECUTION_FIELDS}
+        digest = hashlib.sha256(json.dumps(fields, sort_keys=True).encode("utf-8")).hexdigest()
         self.cfg_hash = int(digest[:15], 16)
         self.events: list[dict] = []
 

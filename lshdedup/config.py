@@ -75,10 +75,11 @@ class DedupConfig:
                                   # O(candidates × |doc|) Python, a
                                   # scale-killer on large corpora.
 
-    # --- execution ---
+    # --- execution (not in the checkpoint fingerprint) ---
     run_id: str = "run0"
     checkpoint_dir: Optional[str] = None
-    shuffle_partitions: int = 32
+    shuffle_partitions: int = 32  # read by nothing; still accepted because
+                                  # bench.py and perfbench pass it
 
     def resolved(self, optimal) -> "DedupConfig":
         """Fill (b, r) via the optimizer if unset; returns a new config."""

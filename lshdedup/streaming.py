@@ -4,26 +4,29 @@ each arriving document is matched against everything inserted before it,
 then inserted.
 
 The reference's README lists streaming persistence as unimplemented
-(README.md:49-52); here it is first-class: a foreachBatch sink where each
-micro-batch
-  1. signs its rows (fused shingle+minhash UDF),
-  2. joins its band rows against the accumulated bucket store
-     (query half) and self-joins within the batch (the insert-order pairs),
-  3. verifies candidates exactly and appends dup pairs,
-  4. appends its band rows + doc texts to the stores (insert half).
+(README.md:49-52); here it is a foreachBatch sink built from the batch
+layers.  Micro-batch N
+  1. signs its rows (``add_signatures``, the fused shingle+minhash UDF),
+  2. finds candidates within the batch (``candidate_pairs``) and against
+     every earlier document (``query_candidates`` over band rows rebuilt
+     from the stored signatures by ``explode_bands``),
+  3. verifies them with ``verify_pairs``, so ``cfg.verify_mode`` applies
+     exactly as in ``dedup_pipeline``,
+  4. writes its dup pairs and its ``(id, text, sig)`` rows.
 
-Scale behavior (what changes as the store outgrows any single batch):
-  * both state stores are hash-PARTITIONED on disk (buckets by
-    pmod(band_hash, n_state_buckets), docs by pmod(xxhash64(id), ...)) and
-    every per-batch read filters to the partitions the batch actually
-    touches — per-batch work is O(batch ∪ touched buckets), never a
-    wholesale store scan;
-  * appends are compacted every ``compact_every`` batches (small-file
-    rewrite with a crash-safe rename swap), so file counts stay bounded on
-    long streams.
-State lives in parquet under ``state_dir``; on a real cluster these are
-Iceberg tables (partitioned the same way) and compaction is Iceberg's
-rewrite_data_files — the logic here is the sandbox stand-in.
+State layout: two parquet stores under ``state_dir``, both keyed by batch,
+``dup_pairs/batch_id=N`` and ``docs/batch_id=N``.  Batch N reads ``docs``
+filtered to ``batch_id < N`` (a partition filter), so every batch scans
+the docs of all earlier batches and rebuilds their band rows.
+
+Replay rule: batch N writes only its own two partitions, each with
+``overwrite``, and then its done marker.  A replay of N after a crash at
+any point rewrites both partitions and never reads its own half-written
+rows, so it leaves the state an uncrashed run would; a done batch replays
+as a no-op.  Every ``compact_every`` batches the docs store is rewritten
+as one partition labelled with the last batch it covers; ``dup_pairs`` is
+not compacted.  On a real cluster these are Iceberg tables partitioned the
+same way, and compaction is Iceberg's rewrite_data_files.
 """
 
 from __future__ import annotations
@@ -33,15 +36,17 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from lshdedup.config import DedupConfig
-from lshdedup.lsh import candidate_pairs, explode_bands
+from lshdedup.lsh import candidate_pairs, explode_bands, query_candidates
 from lshdedup.minhash import add_signatures
-from lshdedup.shingle import distinct_char_shingles_expr, exact_jaccard_expr
+from lshdedup.simhash import simhash_udf
+from lshdedup.verify import verify_pairs
 
 
 class StreamingDedup:
-    """foreachBatch processor maintaining bucket/doc/dup-pair state."""
+    """foreachBatch processor maintaining batch-keyed doc/dup-pair state."""
 
     def __init__(
         self,
@@ -50,7 +55,6 @@ class StreamingDedup:
         state_dir: str,
         id_col: str = "image_id",
         text_col: str = "caption",
-        n_state_buckets: int = 64,
         compact_every: int = 16,
     ):
         self.spark = spark
@@ -58,14 +62,15 @@ class StreamingDedup:
         self.state_dir = state_dir
         self.id_col = id_col
         self.text_col = text_col
-        self.n_state_buckets = n_state_buckets
         self.compact_every = compact_every
         os.makedirs(state_dir, exist_ok=True)
 
-    def _path(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
+    def _path(self, *parts: str) -> str:
+        return os.path.join(self.state_dir, *parts)
 
-    def _read_state(self, name: str) -> DataFrame | None:
+    def _read_state(self, name: str, schema: StructType | None = None) -> DataFrame | None:
+        """The store, or None when it does not exist.  A store that exists
+        but cannot be read raises: reading it as empty would miss dups."""
         path = self._path(name)
         # crash recovery: a compaction interrupted between renames leaves
         # the previous store at <name>_old — restore it
@@ -74,10 +79,8 @@ class StreamingDedup:
             os.rename(old, path)
         if not os.path.exists(path):
             return None
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def _batch_done(self, batch_id: int) -> bool:
         return os.path.exists(self._path(f"_batch_{batch_id}_done"))
@@ -85,132 +88,72 @@ class StreamingDedup:
     def _mark_done(self, batch_id: int) -> None:
         open(self._path(f"_batch_{batch_id}_done"), "w").close()
 
-    def _maybe_compact(self, name: str, batch_id: int) -> None:
-        """Rewrite the store's accumulated small appends into one file per
-        hash partition.  Crash-safe: new store is fully written to a temp
-        dir, then swapped in with two renames (recovery in _read_state)."""
+    def _maybe_compact(self, batch_id: int) -> None:
+        """Rewrite the docs store as the one partition ``batch_id=N`` (N the
+        last batch it covers), in at most one file per core.  Crash-safe:
+        written to a temp dir, then swapped in with two renames (recovery
+        in _read_state)."""
         if self.compact_every <= 0 or (batch_id + 1) % self.compact_every:
             return
-        df = self._read_state(name)
-        if df is None:
-            return
-        path, tmp, old = self._path(name), self._path(name) + "_tmp", self._path(name) + "_old"
+        df = self._read_state("docs")
+        path = self._path("docs")
+        tmp, old = path + "_tmp", path + "_old"
         for p in (tmp, old):
             if os.path.exists(p):
                 shutil.rmtree(p)
         (
-            df.repartition("_pb")
-            .write.mode("overwrite")
-            .partitionBy("_pb")
-            .parquet(tmp)
+            df.drop("batch_id")
+            .coalesce(self.spark.sparkContext.defaultParallelism)
+            .write.parquet(os.path.join(tmp, f"batch_id={batch_id}"))
         )
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old)
 
-    def _touched(self, df: DataFrame, col: str) -> list[int]:
-        """Distinct state-partition ids referenced by ``df[col]`` — tiny
-        (≤ n_state_buckets), collected driver-side to drive partition
-        pruning on the store scan."""
-        return [
-            r["_pb"]
-            for r in df.select(F.col(col).alias("_pb")).distinct().collect()
-        ]
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self._batch_done(batch_id):  # replay after restart → idempotent
+        if self._batch_done(batch_id):
             return
         cfg, idc, txt = self.cfg, self.id_col, self.text_col
-        nb = self.n_state_buckets
         signed = add_signatures(
             batch.select(idc, txt), cfg, text_col=txt, phash_col="_none_"
-        ).persist()
-        bands = (
-            explode_bands(signed, idc, "sig", cfg)
-            .withColumn("_pb", F.pmod(F.col("band_hash"), F.lit(nb)).cast("int"))
-            .persist()
         )
-
-        # query half: new rows vs accumulated store, reading ONLY the hash
-        # partitions this batch's band rows land in (partition pruning via
-        # the literal isin filter)
-        store = self._read_state("buckets")
-        cands_new_old = None
+        simhash_col = "simhash" if cfg.verify_mode == "exact+simhash" else None
+        if simhash_col:
+            signed = signed.withColumn(simhash_col, simhash_udf(cfg)(F.col(txt)))
+        signed = signed.persist()
+        persisted = [signed]
+        bands = explode_bands(signed, idc, "sig", cfg)
+        cands, _ = candidate_pairs(bands, idc, cfg, persisted=persisted)
+        docs = signed
+        store = self._read_state(
+            "docs", StructType(signed.schema.fields + [StructField("batch_id", LongType())])
+        )
         if store is not None:
-            touched = self._touched(bands, "_pb")
-            q = bands.select("band_id", "band_hash", F.col(idc).alias("id_a"))
-            s = store.filter(F.col("_pb").isin(touched)).select(
-                "band_id", "band_hash", F.col(idc).alias("id_b")
-            )
-            cands_new_old = (
-                q.join(s, ["band_id", "band_hash"])
-                .select("id_a", "id_b")
-                .dropDuplicates(["id_a", "id_b"])
-            )
-        # insert-order half: pairs within this batch (candidate_pairs
-        # persists its sized-bucket intermediate; track it so each
-        # micro-batch releases it — foreachBatch runs unbounded batches)
-        batch_persisted: list = []
-        cands_in_batch, _ = candidate_pairs(bands, idc, cfg, persisted=batch_persisted)
-        cands = (
-            cands_in_batch
-            if cands_new_old is None
-            else cands_in_batch.unionByName(cands_new_old)
+            prior = store.filter(F.col("batch_id") < batch_id).drop("batch_id")
+            cands = cands.unionByName(query_candidates(
+                bands.withColumnRenamed(idc, "id_a"),
+                explode_bands(prior, idc, "sig", cfg).withColumnRenamed(idc, "id_b"),
+                "id_a", "id_b",
+            ))
+            docs = signed.unionByName(prior)
+        # is_dup is filtered above the persisted frame (see verify.py)
+        verified = verify_pairs(
+            cands, docs, cfg, id_col=idc, text_col=txt, phash_col=None,
+            simhash_col=simhash_col,
         ).persist()
-
-        # exact verification needs both texts: id_a always comes from this
-        # batch; id_b may be stored — read only the doc partitions the
-        # candidate ids hash into, not the whole docs store
-        doc_store = self._read_state("docs")
-        batch_docs = signed.select(idc, txt)
-        if doc_store is not None:
-            need = cands.select(
-                F.pmod(F.xxhash64(F.col("id_b")), F.lit(nb)).cast("int").alias("_pb")
-            ).distinct()
-            touched_docs = [r["_pb"] for r in need.collect()]
-            stored_docs = doc_store.filter(F.col("_pb").isin(touched_docs)).select(
-                idc, txt
-            )
-            all_docs = batch_docs.unionByName(stored_docs)
-        else:
-            all_docs = batch_docs
-        left = all_docs.select(F.col(idc).alias("id_a"), F.col(txt).alias("_ta"))
-        right = all_docs.select(F.col(idc).alias("id_b"), F.col(txt).alias("_tb"))
-        verified = (
-            cands.join(left, "id_a")
-            .join(right, "id_b")
-            .withColumn(
-                "jaccard",
-                exact_jaccard_expr(
-                    distinct_char_shingles_expr(F.col("_ta"), cfg.k),
-                    distinct_char_shingles_expr(F.col("_tb"), cfg.k),
-                ),
-            )
-            .filter(F.col("jaccard") >= cfg.threshold)
-            .select("id_a", "id_b", "jaccard")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        verified.write.mode("append").parquet(self._path("dup_pairs"))
-
-        # insert half: extend the partitioned stores
-        bands.write.mode("append").partitionBy("_pb").parquet(self._path("buckets"))
+        persisted.append(verified)
+        score = "jaccard" if "jaccard" in verified.columns else "mh_sim"
         (
-            signed.select(idc, txt)
-            .withColumn(
-                "_pb", F.pmod(F.xxhash64(F.col(idc)), F.lit(nb)).cast("int")
-            )
-            .write.mode("append")
-            .partitionBy("_pb")
-            .parquet(self._path("docs"))
+            verified.filter(F.col("is_dup"))
+            .select("id_a", "id_b", F.col(score).alias("jaccard"))
+            .write.mode("overwrite")
+            .parquet(self._path("dup_pairs", f"batch_id={batch_id}"))
         )
-        signed.unpersist()
-        bands.unpersist()
-        cands.unpersist()
-        for df in batch_persisted:
+        signed.write.mode("overwrite").parquet(self._path("docs", f"batch_id={batch_id}"))
+        for df in persisted:
             df.unpersist()
         self._mark_done(batch_id)
-        self._maybe_compact("buckets", batch_id)
-        self._maybe_compact("docs", batch_id)
+        self._maybe_compact(batch_id)
 
     def start(self, stream: DataFrame, checkpoint: str | None = None):
         writer = stream.writeStream.foreachBatch(self.process_batch).option(
@@ -219,9 +162,11 @@ class StreamingDedup:
         return writer.trigger(availableNow=True).start()
 
     def dup_pairs(self) -> DataFrame:
+        """(id_a, id_b, jaccard, batch_id): id_a is from batch batch_id,
+        and jaccard is the minhash estimate under verify_mode="minhash"."""
         out = self._read_state("dup_pairs")
         if out is None:
             return self.spark.createDataFrame(
                 [], "id_a string, id_b string, jaccard double, batch_id long"
             )
-        return out
+        return out.withColumn("batch_id", F.col("batch_id").cast("long"))

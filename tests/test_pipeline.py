@@ -124,6 +124,26 @@ def test_checkpoint_resume(spark, tmp_path):
     df.unpersist()
 
 
+def test_checkpoint_resumes_from_moved_tree(spark, tmp_path):
+    """The checkpoint fingerprint covers only fields that can change
+    output: a finished tree copied to a new checkpoint_dir, rerun with a
+    different shuffle_partitions, resumes all six stages."""
+    import dataclasses
+    import shutil
+
+    df = synth_corpus(spark, SynthConfig(n_rows=60))
+    cfg = dataclasses.replace(CFG, checkpoint_dir=str(tmp_path / "a"), run_id="moved")
+    r1 = dedup_pipeline(spark, df, cfg)
+    c1 = {(r["image_id"], r["cluster_id"]) for r in r1.clusters.collect()}
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    moved = dataclasses.replace(
+        cfg, checkpoint_dir=str(tmp_path / "b"), shuffle_partitions=7)
+    r2 = dedup_pipeline(spark, df, moved)
+    ev = r2.extra["runner"].events
+    assert len(ev) == 6 and all(e["resumed"] for e in ev)
+    assert {(r["image_id"], r["cluster_id"]) for r in r2.clusters.collect()} == c1
+
+
 def test_cfg_hash_stable_across_processes(tmp_path):
     """Resume-after-kill only works if the config fingerprint survives a
     driver restart — builtin hash() is per-process salted, so the runner
