@@ -3,10 +3,12 @@
 Captures `explain("formatted")` for the pipeline's headline stages over a
 parquet source and checks the plan properties the 100 TB design relies on:
 column pruning reaching the scan (no `bytes`), whole-stage codegen around
-the band explode and verify expressions, no shingle `transform(` in a join
-condition of the optimized dup_pairs plan, a hash-partitioned exchange
-feeding the connected-components contraction (never a broadcast or
-cartesian join in CC), and AQE being active.
+the band explode and verify expressions, candidate pairs read off bucket id
+arrays behind one (band_id, band_hash) exchange with no join and no cache,
+no shingle `transform(` in a join condition of the optimized dup_pairs
+plan, a hash-partitioned exchange feeding the connected-components
+contraction (never a broadcast or cartesian join in CC), and AQE being
+active.
 
 Run:  python jobs/plan_audit.py [out_md]
 """
@@ -52,11 +54,11 @@ def main(out_path: str = "PLANS.md") -> int:
     plan_pairs = captured_explain(res.dup_pairs)
     optimized_pairs = res.dup_pairs._jdf.queryExecution().optimizedPlan().toString()
     sections.append((
-        "End-to-end dup_pairs (scan → signatures → banding → self-join → verify)",
+        "End-to-end dup_pairs (scan → signatures → banding → id arrays → verify)",
         plan_pairs,
         "The parquet scan's ReadSchema must NOT contain `bytes`/`w`/`h`/`fmt` "
-        "(column pruning reaches the scan); the bucket self-join is a shuffle "
-        "join keyed on (band_id, band_hash); verify similarity math is native "
+        "(column pruning reaches the scan); the only joins are verify's "
+        "pairs↔docs enrich joins; verify similarity math is native "
         "expressions inside WholeStageCodegen.",
     ))
 
@@ -66,7 +68,17 @@ def main(out_path: str = "PLANS.md") -> int:
         "Band explode (signature → bucket rows)",
         captured_explain(buckets),
         "Narrow: one ArrowEvalPython (the fused signature UDF) then "
-        "generate/explode inside codegen — zero shuffles before the join.",
+        "generate/explode inside codegen — zero shuffles before the bucket "
+        "exchange.",
+    ))
+    plan_cands = captured_explain(candidate_pairs(buckets, "image_id", cfg)[0])
+    sections.append((
+        "Candidate pairs (bucket id arrays)",
+        plan_cands,
+        "Exactly one hashpartitioning(band_id, band_hash) Exchange, shared by "
+        "the bucket-size window and the sorted id-array aggregate; pairs come "
+        "from posexplode + explode(slice) and one (id_a, id_b) dedup "
+        "Exchange — no Join and no InMemoryRelation.",
     ))
 
     from lshdedup.cluster import connected_components, local_roots
@@ -206,6 +218,14 @@ def main(out_path: str = "PLANS.md") -> int:
         for col in ("bytes", "fmt", "w", "h"):
             if col in cols:
                 problems.append(f"unpruned column {col!r} in scan: {schema}")
+    n_bucket_ex = len(re.findall(
+        r"Arguments: hashpartitioning\(band_id#\d+, band_hash#\d+L?, \d+\)", plan_cands))
+    if n_bucket_ex != 1:
+        problems.append(
+            f"candidates plan has {n_bucket_ex} (band_id, band_hash) exchanges, not 1")
+    for bad in ("Join", "InMemoryRelation"):
+        if bad in plan_cands:
+            problems.append(f"candidates plan contains {bad}")
     # verify's shingle deferral holds only while is_dup stays above the
     # verified boundary: a filter pushed into the enrich join inlines the
     # shingle transform into the join condition, once per candidate

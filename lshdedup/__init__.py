@@ -9,9 +9,10 @@ Design (see SURVEY.md):
   * everything is DataFrame ops + vectorized Arrow/pandas UDFs — no
     per-row Python on the hot path, no RDDs;
   * the LSH "index" is not a data structure but an exploded
-    (id, band_id, band_hash) DataFrame whose bucket self-join generates
-    candidate pairs (the reference's ``LSH::insert``/``query`` maps to
-    rows + a hash equi-join, lsh.h:112-159);
+    (id, band_id, band_hash) DataFrame; each bucket aggregates to a sorted
+    id array whose pairs are the candidates (the reference's per-bucket
+    id lists, lsh.h:33-50, 112-144), and an external query is a hash
+    equi-join against the bucket rows (lsh.h:146-159);
   * per-element signature math (minhash.h:135-169) runs as batched numpy
     inside pandas UDFs — the distributed analogue of the reference's
     Eigen/MKL SIMD lanes;

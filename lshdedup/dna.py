@@ -94,7 +94,7 @@ def dna_dup_graph(
 ) -> DataFrame:
     """The reference's flagship DNA dup-graph pipeline (dna_benchmark.h
     §3.1) on Spark: packed shingles → token-hash MinHash signatures → LSH
-    banding → bucket self-join → exact packed-shingle Jaccard verify →
+    banding → bucket id arrays → exact packed-shingle Jaccard verify →
     edge list (id_a, id_b, sim)."""
     from lshdedup.lsh import candidate_pairs, explode_bands
     from lshdedup.minhash import token_hash_signature_udf
@@ -116,7 +116,7 @@ def dna_dup_graph(
     if persisted is not None:
         persisted.append(signed)
     buckets = explode_bands(signed, id_col, "sig", cfg)
-    pairs, _ = candidate_pairs(buckets, id_col, cfg, persisted=persisted)
+    pairs, _ = candidate_pairs(buckets, id_col, cfg)
     a = signed.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = signed.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     return (

@@ -8,8 +8,9 @@ insertion-order asymmetry (lsh.h:126-144).
 
 Spark-first re-expression: there is no index.  The signature column explodes
 to an (id, band_id, band_hash) bucket table; "query_then_insert over the
-whole corpus" IS the bucket self-join with ``id_a < id_b`` — the same pair
-set, order-free and distributed.  Band hashes are computed JVM-side with
+whole corpus" is one aggregate of each bucket into a sorted id array, read
+off as every ``id_a < id_b`` pair — the same pair set, order-free and
+distributed, with no self-join.  Band hashes are computed JVM-side with
 ``xxhash64`` over the band's slice (order-sensitive, seeded by band index),
 so the explode stays inside whole-stage codegen — no Python.
 
@@ -21,7 +22,8 @@ Scale safeguards the reference lacks (single machine, SURVEY §4.9):
     pair generation and surfaced as a skew metric (after exact-dup
     collapsing, an over-cap bucket is almost surely a band-hash pileup, not
     a real dup cluster);
-  * AQE skew-join splitting handles residual medium-hot buckets.
+  * ``cfg.pair_salt`` spreads the pair work of a hot but eligible bucket
+    over several reducers.
 """
 
 from __future__ import annotations
@@ -114,68 +116,52 @@ def candidate_pairs(
     persisted: list | None = None,
     eager: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Bucket self-join → distinct candidate pairs (id_a < id_b).
+    """Bucket id arrays → distinct candidate pairs (id_a < id_b).
 
     Equivalent pair set to running query_then_insert sequentially over the
     corpus (lsh.h:126-144): each unordered pair that shares ≥1 band bucket
-    appears exactly once.
+    appears exactly once.  Like the reference's per-bucket id list
+    (lsh.h:33-50), each eligible bucket becomes one sorted id array and its
+    pairs are read straight off it.
 
     Returns (pairs, skew_report) where skew_report lists buckets skipped by
-    the cap — plan-level: one shuffle for the window count (same
-    partitioning the join reuses), then a hash equi-join.
+    the cap.  Plan: one shuffle on (band_id, band_hash) for the window
+    count, which the array aggregate reuses; over-cap buckets are sized by
+    the (spillable) window and never become arrays.  Both outputs are lazy.
+
+    ``persisted`` and ``eager`` are accepted and ignored: nothing here is
+    cached or counted.  They remain only for existing callers.
     """
-    w = Window.partitionBy("band_id", "band_hash")
-    sized = buckets.withColumn("_bsz", F.count(F.lit(1)).over(w))
-    # Materialize: the self-join consumes `sized` twice (left/right) and the
-    # skew report a third time; without this the upstream signature UDF
-    # would be recomputed per branch.  (The checkpointed pipeline gets the
-    # same effect from the parquet stage boundary.)  Callers that loop
-    # (bench, long-lived sessions) pass `persisted` and unpersist after
-    # materializing downstream results — otherwise the cache accumulates.
-    sized = sized.persist()
-    if persisted is not None:
-        persisted.append(sized)
-    if eager:
-        # Materialize the cache NOW, before the self-join fans out: the
-        # left and right join branches are evaluated CONCURRENTLY on first
-        # use, and a persisted-but-unmaterialized frame is recomputed once
-        # per concurrent consumer (measured: two full window computations
-        # racing).  One count populates the cache; every branch then reads
-        # it.  Orchestrating callers (the pipeline) opt in; lazy query
-        # builders (q_lsh_dedup_pairs) must not run actions at build time.
-        sized.count()
-    eligible = sized.filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= cfg.bucket_cap))
+    keys = ["band_id", "band_hash"]
+    sized = buckets.withColumn("_bsz", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
     skew_report = (
         sized.filter(F.col("_bsz") > cfg.bucket_cap)
-        .groupBy("band_id", "band_hash")
+        .groupBy(*keys)
         .agg(F.max("_bsz").alias("bucket_size"))
     )
-    a = eligible.select(
-        F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("id_a")
+    # collect_set, not collect_list: a repeated id must not pair with itself
+    ids = (
+        sized.filter((F.col("_bsz") >= 2) & (F.col("_bsz") <= cfg.bucket_cap))
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_set(id_col)).alias("_ids"))
     )
-    b = eligible.select(
-        F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("id_b")
-    )
+    mine = F.lit(True)
     if cfg.pair_salt > 1:
-        # explicit skew salting (north rule): split each bucket's LEFT side
-        # into pair_salt sub-keys by id-hash; replicate the RIGHT side once
-        # per salt.  The join key becomes (band_id, band_hash, salt), so a
-        # hot bucket's m² pair work spreads over pair_salt reducers.  Pair
-        # set is unchanged.  (AQE skew-join splitting does this adaptively;
-        # the explicit path guarantees it for pathological buckets.)
+        # explicit skew salting (north rule): replicate each bucket's array
+        # s times and spread the copies over (band_id, band_hash, _salt);
+        # copy k emits only the left ids with pmod(xxhash64(id_a), s) == k,
+        # so a hot bucket's m² pair work spreads over s reducers.  Pair set
+        # is unchanged.
         s = cfg.pair_salt
-        a = a.withColumn("_salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(s)))
-        b = b.withColumn(
+        ids = ids.withColumn(
             "_salt",
             F.explode(F.sequence(F.lit(0).cast("long"), F.lit(s - 1).cast("long"))),
-        )
-        join_keys = ["band_id", "band_hash", "_salt"]
-    else:
-        join_keys = ["band_id", "band_hash"]
+        ).repartition(*keys, "_salt")
+        mine = F.pmod(F.xxhash64(F.col("id_a")), F.lit(s)) == F.col("_salt")
     pairs = (
-        a.join(b, on=join_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        ids.select("*", F.posexplode("_ids").alias("_i", "id_a"))
+        .filter(mine)
+        .select("id_a", F.explode(F.slice("_ids", F.col("_i") + 2, F.size("_ids"))).alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     return pairs, skew_report

@@ -1,13 +1,14 @@
 """The flagship dedup pipeline — the Spark lifecycle of the reference's
 ``dna_benchmark`` entry point (dna_benchmark.h:447-504, SURVEY §3.1):
 
-  scan → exact-dup collapse → signatures → band explode → bucket self-join
+  scan → exact-dup collapse → signatures → band explode → bucket id arrays
   → verify → dup_pairs → connected components → clusters
 
 Shuffle inventory (what the plan must look like at 100 TB):
   1. exact-dup collapse      — shuffle on 128-bit content key
-  2. bucket self-join        — shuffle on (band_id, band_hash); window
-                               count reuses the same partitioning
+  2. candidate pairs         — shuffle on (band_id, band_hash) for the
+                               window count; the id-array aggregate reuses
+                               the same partitioning (no join)
   3. verify enrich           — two joins pairs↔docs (docs side pruned to
                                id/sig/caption/phash only — never `bytes`)
   4. connected components    — one shuffle on the smaller edge endpoint
@@ -73,9 +74,8 @@ def dedup_pipeline(
     stages through ``StageRunner`` when ``cfg.checkpoint_dir`` is set,
     persisted frames otherwise (released by ``DedupResult.unpersist``).
 
-    Building the result is not lazy: in memory, candidate generation runs
-    one action up front (the ``sized`` bucket count), and in both modes
-    connected components' eager local checkpoints evaluate every stage.
+    Building the result is not lazy: in both modes connected components'
+    eager local checkpoints evaluate every stage.
     """
     cfg = cfg.resolved(optimal_params)
     pcol = phash_col if cfg.use_phash and phash_col in df.columns else None
@@ -110,11 +110,9 @@ def dedup_pipeline(
 
     signed = stage("signatures", _signatures)
 
-    # 3. band explode → candidate pairs; a runner skips the eager count,
-    # which on resume would rescan the input
+    # 3. band explode → candidate pairs
     buckets = explode_bands(signed, id_col, "sig", cfg)
-    pairs, skew = candidate_pairs(
-        buckets, id_col, cfg, persisted=persisted, eager=not runner)
+    pairs, skew = candidate_pairs(buckets, id_col, cfg)
     candidates = stage("candidates", lambda: pairs)
 
     # 4. verify; is_dup is filtered above the boundary (see verify.py)

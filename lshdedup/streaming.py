@@ -123,7 +123,7 @@ class StreamingDedup:
         signed = signed.persist()
         persisted = [signed]
         bands = explode_bands(signed, idc, "sig", cfg)
-        cands, _ = candidate_pairs(bands, idc, cfg, persisted=persisted)
+        cands, _ = candidate_pairs(bands, idc, cfg)
         docs = signed
         store = self._read_state(
             "docs", StructType(signed.schema.fields + [StructField("batch_id", LongType())])

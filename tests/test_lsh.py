@@ -1,6 +1,7 @@
 """LSH banding / bucket-join semantics (lsh.h:112-159) on DataFrames."""
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from lshdedup.config import DedupConfig
 from lshdedup.lsh import (
@@ -69,6 +70,39 @@ def test_bucket_cap_excludes_hot_bucket(spark):
     rep = skew.collect()
     assert len(rep) == 1 and rep[0]["bucket_size"] == 5
 
+    # the cap is inclusive: a bucket of exactly cap rows emits all its
+    # pairs, a bucket of cap + 1 rows emits none and is reported
+    cap = cfg.bucket_cap
+    rows = [(f"a{i}", "first caption text") for i in range(cap)]
+    rows += [(f"b{i}", "second other words") for i in range(cap + 1)]
+    bands = explode_bands(_signed(spark, cfg, rows), "image_id", "sig", cfg)
+    pairs, skew = candidate_pairs(bands, "image_id", cfg)
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert got == {(f"a{i}", f"a{j}") for i in range(cap) for j in range(i + 1, cap)}
+    assert [r["bucket_size"] for r in skew.collect()] == [cap + 1]
+    assert skew.schema["bucket_size"].dataType == LongType()
+
+
+def test_candidate_pairs_plan_has_no_cache_or_join(spark):
+    """Pairs are read off per-bucket id arrays: the plan caches nothing
+    and joins nothing, and building it runs no Spark job, whatever the
+    caller passes for the legacy ``persisted``/``eager`` keywords."""
+    cfg = DedupConfig(k=3, n_perm=32, b=8, r=4, use_phash=False)
+    signed = _signed(spark, cfg, [("a", "same text here"), ("b", "same text here")])
+    bands = explode_bands(signed, "image_id", "sig", cfg)
+    sc = spark.sparkContext
+    sc.setJobGroup("candidate_pairs_build", "build candidate_pairs")
+    try:
+        pairs, _ = candidate_pairs(bands, "image_id", cfg, persisted=[], eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("candidate_pairs_build")) == []
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    assert "Join" not in plan
+    assert [tuple(r) for r in pairs.collect()] == [("a", "b")]
+
 
 def test_exact_dup_groups(spark):
     df = spark.createDataFrame(
@@ -83,7 +117,7 @@ def test_exact_dup_groups(spark):
 
 
 def test_pair_set_matches_sequential_query_then_insert(spark):
-    """The bucket self-join yields exactly the unordered pairs a sequential
+    """The bucket id arrays yield exactly the unordered pairs a sequential
     query_then_insert loop (lsh.h:126-144) would: every pair sharing ≥1
     band bucket, once."""
     cfg = DedupConfig(k=2, n_perm=16, b=4, r=4, use_phash=False)
