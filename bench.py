@@ -25,6 +25,17 @@ import time
 from pyspark.sql import functions as F
 
 
+def membership_digest(clusters) -> int:
+    """Order-free digest of cluster membership: ``bit_xor`` of
+    ``xxhash64(image_id, cluster_id)`` over every row.  Runs that put the
+    same ids in the same clusters give the same digest whatever their
+    partitioning or task count (with cached stages sized by AQE, both
+    follow the core count); different memberships collide only by a
+    64-bit hash accident."""
+    return clusters.agg(
+        F.expr("bit_xor(xxhash64(image_id, cluster_id))")).first()[0]
+
+
 def run_bench(sf_dir: str, cpus: int, n_images: int | None = None) -> dict:
     from lshdedup.config import DedupConfig
     from lshdedup.pipeline import dedup_pipeline
@@ -219,11 +230,13 @@ def run_pipeline_only(cpus: int, n_images: int, input_path: str | None = None) -
     res = dedup_pipeline(spark, corpus, cfg)
     n_clusters = res.clusters.select("cluster_id").distinct().count()
     wall = _time.perf_counter() - t0
+    membership = membership_digest(res.clusters)
     spark.stop()
     return {
         "cpus": cpus,
         "n_images": n,
         "n_clusters": n_clusters,
+        "membership": membership,
         "wall_sec": round(wall, 3),
         "images_per_sec": round(n / wall, 2),
     }
@@ -313,6 +326,7 @@ def run_scaling(n_images: int, lo: int = 8, hi: int = 32) -> dict:
         f"local{hi}": results[hi],
         f"speedup_{lo}_to_{hi}": round(t_lo / t_hi, 3),
         "scaling_efficiency": round(eff, 3),
+        "outputs_identical": results[lo]["membership"] == results[hi]["membership"],
         "hw_probe_before": probe_before,
         "hw_probe_after": probe_after,
     }
@@ -370,12 +384,14 @@ def run_slice_worker(cpus: int) -> None:
         res = dedup_pipeline(spark, chunk, cfg)
         n_clusters = res.clusters.select("cluster_id").distinct().count()
         wall = _time.perf_counter() - t0
+        membership = membership_digest(res.clusters)
         res.unpersist()
         chunk.unpersist()
         spark.catalog.clearCache()
         print(
             json.dumps(
-                {"n": n, "n_clusters": n_clusters, "wall_sec": round(wall, 3)}
+                {"n": n, "n_clusters": n_clusters, "membership": membership,
+                 "wall_sec": round(wall, 3)}
             ),
             flush=True,
         )
@@ -401,7 +417,8 @@ def run_scaling_interleaved(
     partitions) — strictly alternating within each chunk and alternating
     leg order across chunks.  Chunk 0 warms both JVMs in the same window
     and is excluded.  Efficiency = (sum_lo / sum_hi) / (hi / lo) over the
-    warm chunks; per-chunk cluster counts must agree between levels.
+    warm chunks; per-chunk cluster membership digests must agree between
+    levels.
 
     This measures the same contract as the sequential pair — the same job,
     same input, two parallelism levels, throughput at both — with the
@@ -515,6 +532,8 @@ def run_scaling_interleaved(
                 f"wall_{hi}": legs[hi]["wall_sec"],
                 f"clusters_{lo}": legs[lo]["n_clusters"],
                 f"clusters_{hi}": legs[hi]["n_clusters"],
+                f"membership_{lo}": legs[lo]["membership"],
+                f"membership_{hi}": legs[hi]["membership"],
                 f"cpu_{lo}": legs[lo].get("cpu_sec"),
                 f"cpu_{hi}": legs[hi].get("cpu_sec"),
                 f"steal_{lo}": legs[lo].get("steal_sec"),
@@ -563,7 +582,7 @@ def run_scaling_interleaved(
         "cpu_sec_hi": round(cpu_hi, 1),
         "cpu_overhead_ratio": round(cpu_hi / cpu_lo, 3) if cpu_lo else None,
         "outputs_identical": all(
-            c[f"clusters_{lo}"] == c[f"clusters_{hi}"] for c in chunks
+            c[f"membership_{lo}"] == c[f"membership_{hi}"] for c in chunks
         ),
         "chunks": chunks,
         "hw_probe_before": probe_before,
@@ -638,6 +657,9 @@ def run_ab(
             "wall_b": legs[wt_b]["wall_sec"],
             "clusters_a": legs[wt_a]["n_clusters"],
             "clusters_b": legs[wt_b]["n_clusters"],
+            # None from a tree whose bench.py predates the digest
+            "membership_a": legs[wt_a].get("membership"),
+            "membership_b": legs[wt_b].get("membership"),
         })
     warm = pairs[1:] if len(pairs) > 1 else pairs
     return {
@@ -648,9 +670,10 @@ def run_ab(
         "pairs": pairs,
         "warm_avg_a": round(statistics.mean(p["wall_a"] for p in warm), 3),
         "warm_avg_b": round(statistics.mean(p["wall_b"] for p in warm), 3),
-        "outputs_identical": all(
-            p["clusters_a"] == p["clusters_b"] for p in pairs
-        ),
+        # None when a leg reports no digest: membership cannot be compared
+        "outputs_identical": None if any(
+            p["membership_a"] is None or p["membership_b"] is None for p in pairs
+        ) else all(p["membership_a"] == p["membership_b"] for p in pairs),
     }
 
 

@@ -99,7 +99,7 @@ def dna_dup_graph(
     from lshdedup.lsh import candidate_pairs, explode_bands
     from lshdedup.minhash import token_hash_signature_udf
     from lshdedup.shingle import exact_jaccard_expr
-    from lshdedup.util import fan_out
+    from lshdedup.util import fan_out, persist_stage
 
     # the packed-shingle derivation below is an interpreted higher-order
     # fold per gram — by far the heaviest narrow work here; spread an
@@ -110,9 +110,8 @@ def dna_dup_graph(
         F.col(seq_col),
         distinct_dna_shingles_expr(seq_col, cfg.k).alias("sh"),
     )
-    signed = shingled.withColumn(
-        "sig", token_hash_signature_udf(cfg)(F.col("sh"))
-    ).persist()
+    signed = persist_stage(
+        shingled.withColumn("sig", token_hash_signature_udf(cfg)(F.col("sh"))))
     if persisted is not None:
         persisted.append(signed)
     buckets = explode_bands(signed, id_col, "sig", cfg)

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lshdedup.config import DedupConfig
+from lshdedup.util import persist_stage
 
 
 def band_hashes_expr(sig_col: str, b: int, r: int) -> Column:
@@ -86,11 +87,12 @@ def exact_dup_groups(
     Key is 128 bits (xxhash64 ⊕ md5-half) so distinct content cannot merge
     even at 10^12 rows.  One shuffle on the content key.
 
-    ``persisted``: when given, the shared window frame is persisted (and
-    appended there for the caller to release) so the reps consumer and the
-    member_edges consumer don't each recompute the content-key shuffle +
-    window — they are materialized at different times in the pipeline and
-    the second pass was a full recompute (guide §2.4: one exchange, reused).
+    ``persisted``: when given, the shared window frame is persisted by
+    ``util.persist_stage`` (and appended there for the caller to release)
+    so the reps consumer and the member_edges consumer don't each
+    recompute the content-key shuffle + window — they are materialized at
+    different times in the pipeline and the second pass was a full
+    recompute (guide §2.4: one exchange, reused).
     """
     cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00null")) for c in key_cols]
     keyed = df.withColumn("_k1", F.xxhash64(*cols)).withColumn(
@@ -99,7 +101,7 @@ def exact_dup_groups(
     w = Window.partitionBy("_k1", "_k2")
     tagged = keyed.withColumn("_rep", F.min(id_col).over(w))
     if persisted is not None:
-        tagged = tagged.persist()
+        tagged = persist_stage(tagged)
         persisted.append(tagged)
     reps = tagged.filter(F.col(id_col) == F.col("_rep")).drop("_k1", "_k2", "_rep")
     member_edges = (

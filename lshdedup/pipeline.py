@@ -17,6 +17,18 @@ Shuffle inventory (what the plan must look like at 100 TB):
                                only for components spanning partitions
 Everything else is narrow.  `bytes` is pruned at the first select and never
 travels past the scan (SURVEY §7.4).
+
+Task inventory: in memory every stage boundary is ``util.persist_stage``,
+which lets AQE coalesce each cached stage's final shuffle read as it does
+for an uncached plan.  A plain ``persist()`` keeps all
+``spark.sql.shuffle.partitions`` (Spark's cached-plan default), and every
+stage downstream of it inherits that task count.  Python tasks are what
+this costs: each pays a fixed 0.2–0.25 s (4-core host) before its UDF sees
+a row, for pyspark's per-task ``importlib.invalidate_caches()``, so count
+a change's Python tasks, not just its rows.  At 2,000 rows and 16 shuffle
+partitions (``local[4]``) a plain ``persist()`` gave 186 tasks per call,
+16 of them for a signature UDF whose kernels need about 0.1 s; sized by
+AQE the call runs 21 tasks, and every cached stage one partition.
 """
 
 from __future__ import annotations
@@ -34,6 +46,7 @@ from lshdedup.lsh import candidate_pairs, exact_dup_groups, explode_bands
 from lshdedup.minhash import add_signatures
 from lshdedup.params import optimal_params
 from lshdedup.simhash import simhash_udf
+from lshdedup.util import persist_stage
 from lshdedup.verify import verify_pairs
 
 
@@ -72,7 +85,9 @@ def dedup_pipeline(
     ``exact_edges``, ``signatures`` (plus the simhash column, if verify
     uses it), ``candidates``, ``verified`` and ``clusters`` — parquet
     stages through ``StageRunner`` when ``cfg.checkpoint_dir`` is set,
-    persisted frames otherwise (released by ``DedupResult.unpersist``).
+    frames persisted by ``util.persist_stage`` otherwise (partition counts
+    sized by AQE, not pinned to ``spark.sql.shuffle.partitions``; released
+    by ``DedupResult.unpersist``).
 
     Building the result is not lazy: in both modes connected components'
     eager local checkpoints evaluate every stage.
@@ -89,7 +104,7 @@ def dedup_pipeline(
     def stage(name, fn):
         if runner:
             return runner.stage(name, fn)
-        out = fn().persist()
+        out = persist_stage(fn())
         persisted.append(out)
         return out
 

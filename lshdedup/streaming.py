@@ -42,6 +42,7 @@ from lshdedup.config import DedupConfig
 from lshdedup.lsh import candidate_pairs, explode_bands, query_candidates
 from lshdedup.minhash import add_signatures
 from lshdedup.simhash import simhash_udf
+from lshdedup.util import persist_stage
 from lshdedup.verify import verify_pairs
 
 
@@ -120,7 +121,7 @@ class StreamingDedup:
         simhash_col = "simhash" if cfg.verify_mode == "exact+simhash" else None
         if simhash_col:
             signed = signed.withColumn(simhash_col, simhash_udf(cfg)(F.col(txt)))
-        signed = signed.persist()
+        signed = persist_stage(signed)
         persisted = [signed]
         bands = explode_bands(signed, idc, "sig", cfg)
         cands, _ = candidate_pairs(bands, idc, cfg)
@@ -137,10 +138,10 @@ class StreamingDedup:
             ))
             docs = signed.unionByName(prior)
         # is_dup is filtered above the persisted frame (see verify.py)
-        verified = verify_pairs(
+        verified = persist_stage(verify_pairs(
             cands, docs, cfg, id_col=idc, text_col=txt, phash_col=None,
             simhash_col=simhash_col,
-        ).persist()
+        ))
         persisted.append(verified)
         score = "jaccard" if "jaccard" in verified.columns else "mh_sim"
         (

@@ -91,6 +91,45 @@ def test_determinism_under_partitioning(spark, corpus):
     df.unpersist()
 
 
+def test_cached_stages_sized_by_aqe():
+    """In memory, every persisted stage boundary keeps AQE's final-stage
+    coalescing: on local[4] with 16 shuffle partitions, no cached frame
+    has more than defaultParallelism partitions once the clusters are
+    collected (a plain persist() keeps all 16).  Runs in its own process
+    because the test session's master is fixed."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "from lshdedup.config import DedupConfig\n"
+        "from lshdedup.pipeline import dedup_pipeline\n"
+        "from lshdedup.session import get_spark\n"
+        "from lshdedup.synth import SynthConfig, synth_corpus\n"
+        "spark = get_spark(master='local[4]', shuffle_partitions=16,\n"
+        "                  extra={'spark.driver.memory': '1g'})\n"
+        f"cfg = DedupConfig.from_json({CFG.to_json()!r})\n"
+        "res = dedup_pipeline(spark, synth_corpus(spark, SynthConfig(n_rows=160)), cfg)\n"
+        "res.clusters.collect()\n"
+        "print(json.dumps({'par': spark.sparkContext.defaultParallelism,\n"
+        "                  'parts': [d.rdd.getNumPartitions()\n"
+        "                            for d in res.extra['persisted']]}))\n"
+        "spark.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=root,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["par"] == 4
+    # the exact-dup window frame plus the six stage boundaries
+    assert len(got["parts"]) == 7
+    assert all(n <= got["par"] for n in got["parts"]), got["parts"]
+
+
 def test_checkpoint_resume(spark, tmp_path):
     """Rerun with same run_id: stages resumed, identical clusters
     (SURVEY §5.2 item 4); the checkpointed run cuts the pipeline's six
