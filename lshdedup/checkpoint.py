@@ -10,8 +10,9 @@ skipped on rerun — resumability is table-existence, not driver state, so a
 killed job resumes mid-pipeline.
 
 Every completed stage appends one JSON metrics line (rows, wall seconds,
-per-partition row counts = lineage, config hash) to ``metrics.jsonl`` and
-to a queryable ``_metrics`` parquet table.
+per-partition row counts = lineage, config hash) to
+``<checkpoint_dir>/<run_id>/metrics.jsonl``; ``StageRunner.metrics_df``
+reads that file back as a DataFrame.  A resumed stage adds no line.
 """
 
 from __future__ import annotations
@@ -70,12 +71,7 @@ class StageRunner:
         return self.spark.read.parquet(self._path(stage))
 
     # -- the stage wrapper --
-    def stage(
-        self,
-        name: str,
-        fn: Callable[[], DataFrame],
-        lineage: bool = True,
-    ) -> DataFrame:
+    def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Run (or resume) one stage; returns the materialized output."""
         if self._complete(name):
             self.events.append({"stage": name, "resumed": True})
@@ -92,15 +88,14 @@ class StageRunner:
             "cfg_hash": self.cfg_hash,
             "run_id": self.cfg.run_id,
         }
-        if lineage:
-            parts = (
-                result.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            )
-            meta["rows"] = int(sum(r["rows"] for r in parts))
-            meta["n_partitions"] = len(parts)
-            meta["partition_rows"] = {int(r["partition"]): int(r["rows"]) for r in parts}
+        parts = (
+            result.groupBy(F.spark_partition_id().alias("partition"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+            .collect()
+        )
+        meta["rows"] = int(sum(r["rows"] for r in parts))
+        meta["n_partitions"] = len(parts)
+        meta["partition_rows"] = {int(r["partition"]): int(r["rows"]) for r in parts}
         with open(os.path.join(self._path(name), "_LSHDEDUP_DONE.json"), "w") as fh:
             json.dump(meta, fh)
         with open(os.path.join(self.root, "metrics.jsonl"), "a") as fh:

@@ -266,7 +266,3 @@ def phash64(pixels: np.ndarray) -> int:
         if bit:
             out |= 1 << idx
     return out - (1 << 63) if out >= (1 << 63) else out
-
-
-def phash64_batch(pixel_list: list[np.ndarray]) -> np.ndarray:
-    return np.array([phash64(p) for p in pixel_list], dtype=np.int64)

@@ -49,31 +49,27 @@ class DedupConfig:
     r: Optional[int] = None       # rows per band
 
     # --- image path (graft-specific; NOT in reference) ---
-    use_phash: bool = True        # blend pHash-derived image shingles
-    phash_window_bits: int = 16   # sliding bit-window width over the 64-bit phash
-    phash_window_step: int = 4    # step between windows
+    use_phash: bool = True        # sign pHash bit-window shingles with the
+                                  # caption's, in the same UDF pass
+                                  # (minhash.signature_udf; windows in
+                                  # hashing.phash_window_hashes)
 
     # --- skew / scale (north_rule; reference has none) ---
     bucket_cap: int = 4096        # drop band buckets larger than this (log metric)
     pair_salt: int = 0            # extra repartition salt for pair-gen (0 = AQE only)
 
     # --- verification (dna_benchmark.h:197-225 + graft extensions) ---
-    verify_mode: str = "exact"    # "minhash" | "exact" | "exact+simhash"
+    verify_mode: str = "exact"    # "minhash" | "exact" | "exact+simhash";
+                                  # under "exact+simhash" add_signatures
+                                  # also writes the per-doc simhash column
     simhash_max_hamming: int = 3
-    lcs_min_ratio: float = 0.0    # >0 enables suffix-automaton LCS check.
-                                  # NOTE: with the default screen below,
-                                  # pairs whose common substring contributes
-                                  # few DISTINCT k-grams (mixed low/high-
-                                  # entropy docs) can be screened out — a
-                                  # recall heuristic, not an exact bound.
-    lcs_screen_slack: int = 4     # native pre-LCS screen slack (verify.py):
-                                  # keep pairs with gram inter within 1/slack
-                                  # of the length OR containment bound.
-                                  # <= 0 disables screening: exact recall,
-                                  # but the suffix-automaton UDF then runs
-                                  # on EVERY candidate pair —
-                                  # O(candidates × |doc|) Python, a
-                                  # scale-killer on large corpora.
+    lcs_min_ratio: float = 0.0    # >0 enables suffix-automaton LCS check,
+                                  # behind a native gram screen (verify.py).
+                                  # NOTE: pairs whose common substring
+                                  # contributes few DISTINCT k-grams (mixed
+                                  # low/high-entropy docs) can be screened
+                                  # out — a recall heuristic, not an exact
+                                  # bound.
 
     # --- execution (not in the checkpoint fingerprint) ---
     run_id: str = "run0"

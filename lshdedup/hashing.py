@@ -581,11 +581,6 @@ def _sm_finalize(z: np.ndarray) -> None:
     np.bitwise_xor(z, t, out=z)
 
 
-def minhash_similarity(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    """Estimated Jaccard = fraction of equal lanes (minhash.h:188-207)."""
-    return float(np.mean(sig_a == sig_b))
-
-
 def exact_jaccard_hashed(h_a: np.ndarray, h_b: np.ndarray) -> float:
     """Exact Jaccard of two hashed-shingle sets (minhash.h:210-215)."""
     a = np.unique(h_a)

@@ -1,4 +1,4 @@
-"""MinHash signature stage — fused shingle→hash→signature pandas UDFs.
+"""MinHash signature stage — one fused shingle→hash→signature pandas UDF.
 
 The reference signs one document at a time: 128 Eigen lanes folded over the
 document's shingle hashes (minhash.h:135-169), with an LRU cache memoizing
@@ -11,7 +11,8 @@ The LRU cache is deliberately NOT ported — it is a single-machine perf trick
 (SURVEY §4.4); duplicate grams cannot change a minimum, so corpus-level
 dedup is unnecessary for correctness and the batch math already amortizes.
 
-pHash image shingles merge by element-wise min of two signatures:
+Every scheme signs through one UDF (signature_udf), and pHash image
+shingles merge inside it, in the same Arrow batch, by element-wise min:
 min over (A ∪ B) == elementwise-min(min over A, min over B).
 """
 
@@ -38,6 +39,7 @@ from lshdedup.hashing import (
     series_grams,
     splitmix64,
 )
+from lshdedup.simhash import simhash_udf
 
 
 @lru_cache(maxsize=8)
@@ -82,38 +84,79 @@ def _sig_to_series(sig: np.ndarray) -> pd.Series:
     return pd.Series(list(signed))
 
 
-def caption_signature_udf(cfg: DedupConfig):
-    """pandas UDF: caption string → array<long> MinHash signature.
+def _phash_windows(phashes: pd.Series) -> np.ndarray:
+    """(n, m) uint64 pHash bit-window shingles; a null pHash signs as 0."""
+    return phash_window_hashes(phashes.fillna(0).to_numpy(dtype=np.int64))
+
+
+def signature_udf(cfg: DedupConfig, with_phash: bool):
+    """pandas UDF: caption[, pHash] → array<long> signature, for every
+    ``cfg.sig_scheme``.
 
     Fuses split_k_shingling_fast (k_shingles.h:67-85) + element hashing
     (hash.h:89-141) + MinHash::update (minhash.h:153-169) into one
-    vectorized pass per Arrow batch.
+    vectorized pass per Arrow batch.  with_phash=True takes (caption,
+    phash) and signs the UNION of the caption k-grams and the pHash
+    bit-window shingles (hashing.phash_window_hashes) in the same pass:
+    kperm's two signatures merge by element-wise min, OPH's two raw bucket
+    matrices merge by element-wise min BEFORE densification — both exact,
+    since the min over (A ∪ B) is the min of the two minima.
     """
     k, n_perm, seed, scheme = cfg.k, cfg.n_perm, cfg.seed, cfg.sig_scheme
     hasher, elem_mod, vmask = _scheme_knobs(cfg)
 
+    def sign_oph(texts: pd.Series, phashes: pd.Series | None) -> np.ndarray:
+        flat, bounds, _, _ = series_grams(texts, k)  # Arrow-native (r5)
+        idx, lens = ragged_valid_indices(bounds)
+        raw = oph_raw(flat[idx], lens, n_perm, seed)
+        if phashes is not None:
+            wins = _phash_windows(phashes)
+            lens = np.full(len(texts), wins.shape[1], dtype=np.int64)
+            img = oph_raw(wins.reshape(-1), lens, n_perm, seed)
+            raw = np.minimum(raw, img)
+        return oph_densify(raw, n_perm, seed)
+
+    def sign_kperm(texts: pd.Series, phashes: pd.Series | None) -> np.ndarray:
+        a, b = _perms(n_perm, seed, scheme)
+        # Arrow-native marshalling: UTF-8 encode + row lengths + <k padding
+        # all C-side/numpy (hashing.series_grams) — no per-row Python
+        # objects in the signature hot path (r5)
+        flat, bounds, data, offs = series_grams(texts, k, hasher)
+        if scheme == "kperm-ref":
+            # reference parity for <k strings: split_k_shingling_fast
+            # returns the WHOLE short string unpadded (k_shingles.h:68-71);
+            # overwrite the padded-window hash.  Scalar loop touches only
+            # the rare short rows.
+            from lshdedup.refrng import xxh64
+
+            for i in np.nonzero(np.diff(offs) < k)[0]:
+                t = data[offs[i] : offs[i + 1]].tobytes()
+                flat[bounds[i, 0]] = np.uint64(xxh64(t, 0))
+        if elem_mod is not None:
+            flat = flat % np.uint64(elem_mod)
+        out = minhash_segments(flat, bounds, a, b, vmask=vmask)
+        if phashes is not None:
+            wins = _phash_windows(phashes)
+            if elem_mod is not None:
+                wins = wins % np.uint64(elem_mod)
+            out = np.minimum(out, minhash_fixed(wins, a, b, vmask=vmask))
+        return out
+
+    sign = sign_oph if scheme == "oph" else sign_kperm
+
+    if with_phash:
+
+        @F.pandas_udf(ArrayType(LongType()))
+        def sig2(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+            for texts, phashes in it:
+                yield _sig_to_series(sign(texts, phashes))
+
+        return sig2
+
     @F.pandas_udf(ArrayType(LongType()))
     def sig(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        a, b = _perms(n_perm, seed, scheme)
         for batch in texts:
-            # Arrow-native marshalling: UTF-8 encode + row lengths +
-            # <k padding all C-side/numpy (hashing.series_grams) — no
-            # per-row Python objects in the signature hot path (r5)
-            flat, bounds, data, offs = series_grams(batch, k, hasher)
-            if scheme == "kperm-ref":
-                # reference parity for <k strings: split_k_shingling_fast
-                # returns the WHOLE short string unpadded
-                # (k_shingles.h:68-71); overwrite the padded-window hash.
-                # Scalar loop touches only the rare short rows.
-                from lshdedup.refrng import xxh64
-
-                for i in np.nonzero(np.diff(offs) < k)[0]:
-                    t = data[offs[i] : offs[i + 1]].tobytes()
-                    flat[bounds[i, 0]] = np.uint64(xxh64(t, 0))
-            if elem_mod is not None:
-                flat = flat % np.uint64(elem_mod)
-            out = minhash_segments(flat, bounds, a, b, vmask=vmask)
-            yield _sig_to_series(out)
+            yield _sig_to_series(sign(batch, None))
 
     return sig
 
@@ -159,75 +202,6 @@ def token_hash_signature_udf(cfg: DedupConfig):
     return sig
 
 
-def phash_signature_udf(cfg: DedupConfig):
-    """pandas UDF: int64 pHash → array<long> signature over its
-    bit-window shingles (graft image path; window scheme in
-    hashing.phash_window_hashes)."""
-    n_perm, seed, scheme = cfg.n_perm, cfg.seed, cfg.sig_scheme
-    wbits, step = cfg.phash_window_bits, cfg.phash_window_step
-    _, elem_mod, vmask = _scheme_knobs(cfg)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(phashes: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        a, b = _perms(n_perm, seed, scheme)
-        for batch in phashes:
-            ph = batch.fillna(0).to_numpy(dtype=np.int64)
-            wins = phash_window_hashes(ph, wbits, step)
-            if elem_mod is not None:
-                wins = wins % np.uint64(elem_mod)
-            out = minhash_fixed(wins, a, b, vmask=vmask)
-            yield _sig_to_series(out)
-
-    return sig
-
-
-def oph_signature_udf(cfg: DedupConfig, with_phash: bool):
-    """pandas UDF: one-permutation-hashing signature (hashing.oph_raw) —
-    the scale-path scheme: O(n_grams) per document instead of
-    O(n_grams × n_perm), same LSH banding downstream.
-
-    with_phash=True takes (caption, phash) and signs the UNION of caption
-    k-gram hashes and pHash window hashes exactly (raw bucket matrices
-    merge via elementwise min BEFORE densification)."""
-    k, n_perm, seed = cfg.k, cfg.n_perm, cfg.seed
-    wbits, step = cfg.phash_window_bits, cfg.phash_window_step
-
-    def _caption_raw(texts: pd.Series) -> np.ndarray:
-        flat, bounds, _, _ = series_grams(texts, k)  # Arrow-native (r5)
-        idx, lens = ragged_valid_indices(bounds)
-        return oph_raw(flat[idx], lens, n_perm, seed)
-
-    if not with_phash:
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def sig(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for batch in texts:
-                out = oph_densify(_caption_raw(batch), n_perm, seed)
-                yield _sig_to_series(out)
-
-        return sig
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig2(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for texts, phashes in it:
-            cap = _caption_raw(texts)
-            ph = phashes.fillna(0).to_numpy(dtype=np.int64)
-            wins = phash_window_hashes(ph, wbits, step)  # (n, m) uint64
-            m = wins.shape[1]
-            lens = np.full(len(texts), m, dtype=np.int64)
-            img = oph_raw(wins.reshape(-1), lens, n_perm, seed)
-            out = oph_densify(np.minimum(cap, img), n_perm, seed)
-            yield _sig_to_series(out)
-
-    return sig2
-
-
-def merge_signatures_expr(sig_a: Column, sig_b: Column) -> Column:
-    """Element-wise min of two signatures == signature of the shingle-set
-    union.  Native zip_with — stays in codegen."""
-    return F.zip_with(sig_a, sig_b, lambda x, y: F.least(x, y))
-
-
 def minhash_similarity_expr(sig_a: Column, sig_b: Column) -> Column:
     """Estimated Jaccard = fraction of equal lanes (minhash.h:188-207),
     as a native expression (no UDF on the verify hot path).
@@ -248,13 +222,16 @@ def add_signatures(
     df: DataFrame,
     cfg: DedupConfig,
     text_col: str = "caption",
-    phash_col: str = "phash",
+    phash_col: str | None = "phash",
     out_col: str = "sig",
 ) -> DataFrame:
-    """Attach the combined MinHash signature column.
+    """Attach the signature column, plus every other per-doc column that
+    verify_pairs reads under ``cfg``: ``simhash`` when
+    ``cfg.verify_mode == "exact+simhash"``.
 
-    caption-only, phash-only, or blended (elementwise min) per config.
-    Narrow transformation — no shuffle is introduced here.
+    The pHash channel joins the signature when ``cfg.use_phash`` and
+    ``phash_col`` is a column of ``df`` (signature_udf).  Narrow
+    transformation — no shuffle is introduced here.
 
     cfg.sig_scheme: "kperm" = classic (a*h+b) mod p over 128 permutations
     (reference-parity path, minhash.h:135-169); "oph" = one-permutation
@@ -267,19 +244,9 @@ def add_signatures(
     from lshdedup.util import fan_out
 
     df = fan_out(df)
-    if cfg.sig_scheme == "oph":
-        use_ph = cfg.use_phash and phash_col in df.columns
-        udf = oph_signature_udf(cfg, use_ph)
-        col = (
-            udf(F.col(text_col), F.col(phash_col))
-            if use_ph
-            else udf(F.col(text_col))
-        )
-        return df.withColumn(out_col, col)
-    cap_sig = caption_signature_udf(cfg)(F.col(text_col))
-    if cfg.use_phash and phash_col in df.columns:
-        ph_sig = phash_signature_udf(cfg)(F.col(phash_col))
-        combined = merge_signatures_expr(cap_sig, ph_sig)
-    else:
-        combined = cap_sig
-    return df.withColumn(out_col, combined)
+    use_ph = cfg.use_phash and phash_col in df.columns
+    cols = [F.col(text_col)] + ([F.col(phash_col)] if use_ph else [])
+    out = df.withColumn(out_col, signature_udf(cfg, use_ph)(*cols))
+    if cfg.verify_mode == "exact+simhash":
+        out = out.withColumn("simhash", simhash_udf(cfg)(F.col(text_col)))
+    return out

@@ -45,7 +45,6 @@ from lshdedup.config import DedupConfig
 from lshdedup.lsh import candidate_pairs, exact_dup_groups, explode_bands
 from lshdedup.minhash import add_signatures
 from lshdedup.params import optimal_params
-from lshdedup.simhash import simhash_udf
 from lshdedup.util import persist_stage
 from lshdedup.verify import verify_pairs
 
@@ -82,8 +81,9 @@ def dedup_pipeline(
     (e.g. the fat ``bytes`` column) are pruned immediately.
 
     Both modes cut the same six stage boundaries: ``reps``,
-    ``exact_edges``, ``signatures`` (plus the simhash column, if verify
-    uses it), ``candidates``, ``verified`` and ``clusters`` — parquet
+    ``exact_edges``, ``signatures`` (``add_signatures``' output: the
+    signature, pHash merged in the same UDF pass, plus every other per-doc
+    column verify reads), ``candidates``, ``verified`` and ``clusters`` — parquet
     stages through ``StageRunner`` when ``cfg.checkpoint_dir`` is set,
     frames persisted by ``util.persist_stage`` otherwise (partition counts
     sized by AQE, not pinned to ``spark.sql.shuffle.partitions``; released
@@ -94,7 +94,6 @@ def dedup_pipeline(
     """
     cfg = cfg.resolved(optimal_params)
     pcol = phash_col if cfg.use_phash and phash_col in df.columns else None
-    simhash_col = "simhash" if cfg.verify_mode == "exact+simhash" else None
     key_cols = [text_col] + ([pcol] if pcol else [])
     narrow = df.select(id_col, *key_cols)
 
@@ -108,22 +107,14 @@ def dedup_pipeline(
         persisted.append(out)
         return out
 
-    # 1. exact-dup collapse (lsh.py docstring).  Only in memory is the shared
-    # window frame cached: with a runner a cache made reps 16 parquet files
-    # instead of 1 and cost more task CPU than computing the window twice.
-    reps_df, edges_df = exact_dup_groups(
-        narrow, id_col, key_cols, persisted=None if runner else persisted)
+    # 1. exact-dup collapse (lsh.py docstring)
+    reps_df, edges_df = exact_dup_groups(narrow, id_col, key_cols, persisted=persisted)
     reps = stage("reps", lambda: reps_df)
     exact_edges = stage("exact_edges", lambda: edges_df)
 
-    # 2. signatures (fused shingle+minhash UDF, once per row)
-    def _signatures():
-        out = add_signatures(reps, cfg, text_col=text_col, phash_col=pcol or "_none_")
-        if simhash_col:
-            out = out.withColumn(simhash_col, simhash_udf(cfg)(F.col(text_col)))
-        return out
-
-    signed = stage("signatures", _signatures)
+    # 2. signatures (one fused shingle+minhash UDF pass per row)
+    signed = stage("signatures", lambda: add_signatures(
+        reps, cfg, text_col=text_col, phash_col=pcol))
 
     # 3. band explode → candidate pairs
     buckets = explode_bands(signed, id_col, "sig", cfg)
@@ -133,7 +124,7 @@ def dedup_pipeline(
     # 4. verify; is_dup is filtered above the boundary (see verify.py)
     verified = stage("verified", lambda: verify_pairs(
         candidates, signed, cfg, id_col=id_col, text_col=text_col,
-        phash_col=pcol, simhash_col=simhash_col))
+        phash_col=pcol))
     dup_pairs = verified.filter(F.col("is_dup"))
 
     # 5. connected components over (exact-dup edges ∪ verified rep pairs)

@@ -12,7 +12,8 @@ layers.  Micro-batch N
      from the stored signatures by ``explode_bands``),
   3. verifies them with ``verify_pairs``, so ``cfg.verify_mode`` applies
      exactly as in ``dedup_pipeline``,
-  4. writes its dup pairs and its ``(id, text, sig)`` rows.
+  4. writes its dup pairs and its signed rows: ``(id, text, sig)``, plus
+     ``simhash`` when verify reads it.
 
 State layout: two parquet stores under ``state_dir``, both keyed by batch,
 ``dup_pairs/batch_id=N`` and ``docs/batch_id=N``.  Batch N reads ``docs``
@@ -41,7 +42,6 @@ from pyspark.sql.types import LongType, StructField, StructType
 from lshdedup.config import DedupConfig
 from lshdedup.lsh import candidate_pairs, explode_bands, query_candidates
 from lshdedup.minhash import add_signatures
-from lshdedup.simhash import simhash_udf
 from lshdedup.util import persist_stage
 from lshdedup.verify import verify_pairs
 
@@ -115,13 +115,9 @@ class StreamingDedup:
         if self._batch_done(batch_id):
             return
         cfg, idc, txt = self.cfg, self.id_col, self.text_col
-        signed = add_signatures(
-            batch.select(idc, txt), cfg, text_col=txt, phash_col="_none_"
+        signed = persist_stage(
+            add_signatures(batch.select(idc, txt), cfg, text_col=txt, phash_col=None)
         )
-        simhash_col = "simhash" if cfg.verify_mode == "exact+simhash" else None
-        if simhash_col:
-            signed = signed.withColumn(simhash_col, simhash_udf(cfg)(F.col(txt)))
-        signed = persist_stage(signed)
         persisted = [signed]
         bands = explode_bands(signed, idc, "sig", cfg)
         cands, _ = candidate_pairs(bands, idc, cfg)
@@ -140,7 +136,6 @@ class StreamingDedup:
         # is_dup is filtered above the persisted frame (see verify.py)
         verified = persist_stage(verify_pairs(
             cands, docs, cfg, id_col=idc, text_col=txt, phash_col=None,
-            simhash_col=simhash_col,
         ))
         persisted.append(verified)
         score = "jaccard" if "jaccard" in verified.columns else "mh_sim"

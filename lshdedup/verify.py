@@ -23,6 +23,10 @@ from lshdedup.minhash import minhash_similarity_expr
 from lshdedup.shingle import distinct_char_shingles_expr, exact_jaccard_expr
 from lshdedup.simhash import hamming_expr
 
+# the native pre-LCS screen keeps a pair whose gram intersection is within
+# a factor of 1/LCS_SCREEN_SLACK of the length OR the containment bound
+LCS_SCREEN_SLACK = 4
+
 
 def enrich_pairs(
     pairs: DataFrame,
@@ -119,7 +123,6 @@ def verify_pairs(
     text_col: str = "caption",
     phash_col: str | None = "phash",
     sig_col: str = "sig",
-    simhash_col: str | None = None,
 ) -> DataFrame:
     """Score candidate pairs and decide ``is_dup``.
 
@@ -132,14 +135,16 @@ def verify_pairs(
       minhash        — mh_sim >= threshold (the reference's own filter,
                        dna_benchmark.h:209-214)
       exact          — exact caption Jaccard >= threshold, OR image
-                       near-dup (phash hamming <= simhash_max_hamming), OR
-                       near-exact caption (simhash hamming) when enabled
-      exact+simhash  — as exact, with the simhash channel forced on
+                       near-dup (phash hamming <= simhash_max_hamming)
+      exact+simhash  — as exact, plus the near-exact caption channel
+                       (simhash hamming) over ``docs``' ``simhash`` column,
+                       which add_signatures writes under this mode
+
+    ``docs`` is the signing stage's output (minhash.add_signatures): it
+    carries every per-doc column this function reads.
     """
     use_phash = phash_col is not None and cfg.use_phash and phash_col in docs.columns
-    want_simhash = (
-        cfg.verify_mode == "exact+simhash" and simhash_col is not None
-    )
+    want_simhash = cfg.verify_mode == "exact+simhash"
     # Shingle-derivation placement (r6; guide §8 "decide with small rows,
     # move/compute the heavy thing late"): the expensive per-side work —
     # distinct shingle set + xxhash64 per shingle, multi-KB arrays — is
@@ -165,8 +170,7 @@ def verify_pairs(
     # to negligible collisions, and |A∪B| = |A|+|B|−|A∩B| means the union
     # array is never materialized (unchanged from r4).
     need_text = cfg.lcs_min_ratio > 0
-    lcs_screen = need_text and cfg.lcs_screen_slack > 0
-    defer_sh = cfg.verify_mode != "minhash" and not lcs_screen
+    defer_sh = cfg.verify_mode != "minhash" and not need_text
     prep_cols = [F.col(id_col), F.col(sig_col)]
     if cfg.verify_mode != "minhash" and not defer_sh:
         sh = F.transform(
@@ -179,7 +183,7 @@ def verify_pairs(
     if use_phash:
         prep_cols.append(F.col(phash_col))
     if want_simhash:
-        prep_cols.append(F.col(simhash_col))
+        prep_cols.append(F.col("simhash"))
     prepped = docs.select(*prep_cols)
 
     cols = [c for c in prepped.columns if c != id_col]
@@ -205,7 +209,7 @@ def verify_pairs(
         )
     if want_simhash:
         pre = pre | (
-            hamming_expr(F.col(f"{simhash_col}_a"), F.col(f"{simhash_col}_b"))
+            hamming_expr(F.col("simhash_a"), F.col("simhash_b"))
             <= cfg.simhash_max_hamming
         )
     if cfg.lcs_min_ratio > 0:
@@ -221,23 +225,19 @@ def verify_pairs(
         #     keeps low-entropy docs (few distinct grams in a long repeat)
         #     the absolute bound would drop.
         # The screen is a heuristic (adversarial content can still evade
-        # it); lcs_screen_slack <= 0 disables it and restores the
-        # scan-every-candidate behavior at its full cost.
-        if cfg.lcs_screen_slack <= 0:
-            pre = F.lit(True)
-        else:
-            inter_pre = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-            min_len = F.least(
-                F.length(F.col(f"{text_col}_a")), F.length(F.col(f"{text_col}_b"))
-            )
-            required = F.ceil(F.lit(cfg.lcs_min_ratio) * min_len) - F.lit(cfg.k - 1)
-            smaller_nsh = F.least(F.col("_nsh_a"), F.col("_nsh_b"))
-            slack = F.lit(cfg.lcs_screen_slack)
-            pre = (
-                pre
-                | (inter_pre * slack >= required)
-                | (inter_pre * slack >= F.lit(cfg.lcs_min_ratio) * smaller_nsh)
-            )
+        # it); LCS_SCREEN_SLACK trades its recall against UDF volume.
+        inter_pre = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
+        min_len = F.least(
+            F.length(F.col(f"{text_col}_a")), F.length(F.col(f"{text_col}_b"))
+        )
+        required = F.ceil(F.lit(cfg.lcs_min_ratio) * min_len) - F.lit(cfg.k - 1)
+        smaller_nsh = F.least(F.col("_nsh_a"), F.col("_nsh_b"))
+        slack = F.lit(LCS_SCREEN_SLACK)
+        pre = (
+            pre
+            | (inter_pre * slack >= required)
+            | (inter_pre * slack >= F.lit(cfg.lcs_min_ratio) * smaller_nsh)
+        )
     out = out.filter(pre)
     if defer_sh:
         # derive the hashed shingle sets NOW — after the join, after the
@@ -266,7 +266,7 @@ def verify_pairs(
     if want_simhash:
         out = out.withColumn(
             "simhash_hamming",
-            hamming_expr(F.col(f"{simhash_col}_a"), F.col(f"{simhash_col}_b")),
+            hamming_expr(F.col("simhash_a"), F.col("simhash_b")),
         )
         dup = dup | (F.col("simhash_hamming") <= cfg.simhash_max_hamming)
         keep.append("simhash_hamming")

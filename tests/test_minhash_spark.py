@@ -1,19 +1,32 @@
 """Signature UDFs on Spark vs the numpy core, and the reference's word-set
 fixtures (test.h:85-138)."""
 
+import re
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from lshdedup.config import DedupConfig
-from lshdedup.hashing import char_shingle_hashes, generate_permutations, minhash_segments
+from lshdedup.config import MERSENNE_31, DedupConfig
+from lshdedup.hashing import (
+    char_shingle_hashes,
+    generate_permutations,
+    minhash_fixed,
+    minhash_segments,
+    oph_densify,
+    oph_raw,
+    phash_window_hashes,
+    ragged_valid_indices,
+    series_grams,
+)
 from lshdedup.minhash import (
     add_signatures,
-    caption_signature_udf,
-    merge_signatures_expr,
     minhash_similarity_expr,
+    signature_udf,
     token_hash_signature_udf,
 )
+from lshdedup.refrng import ref_permutations, xxh64_windows
 
 CFG = DedupConfig(k=3, n_perm=64, seed=1)
 
@@ -21,7 +34,7 @@ CFG = DedupConfig(k=3, n_perm=64, seed=1)
 def test_udf_matches_numpy_core(spark):
     texts = ["hello world", "abc", "x", ""]
     df = spark.createDataFrame([(t,) for t in texts], ["caption"])
-    got = df.select(caption_signature_udf(CFG)(F.col("caption")).alias("sig")).collect()
+    got = df.select(signature_udf(CFG, False)(F.col("caption")).alias("sig")).collect()
     a, b = generate_permutations(CFG.n_perm, CFG.seed)
     flat, bounds = char_shingle_hashes([t.encode() for t in texts], CFG.k)
     want = minhash_segments(flat, bounds, a, b).astype(np.int64)
@@ -37,18 +50,72 @@ def test_signature_partitioning_invariance(spark):
     df2 = spark.createDataFrame(texts, ["caption"]).repartition(16)
     s1 = {
         r["caption"]: r["sig"]
-        for r in df1.select("caption", caption_signature_udf(CFG)(F.col("caption")).alias("sig")).collect()
+        for r in df1.select("caption", signature_udf(CFG, False)(F.col("caption")).alias("sig")).collect()
     }
     s2 = {
         r["caption"]: r["sig"]
-        for r in df2.select("caption", caption_signature_udf(CFG)(F.col("caption")).alias("sig")).collect()
+        for r in df2.select("caption", signature_udf(CFG, False)(F.col("caption")).alias("sig")).collect()
     }
     assert s1 == s2
 
 
-def test_merge_is_elementwise_min(spark):
-    df = spark.createDataFrame([([3, 9, 1], [5, 2, 1])], "a array<long>, b array<long>")
-    assert df.select(merge_signatures_expr(F.col("a"), F.col("b")).alias("m")).first()["m"] == [3, 2, 1]
+PH_ROWS = [
+    ("a", "some caption text", 123456789),
+    ("b", "other caption here", -42),
+    ("c", "a third caption", None),  # a null pHash signs as 0
+]
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        DedupConfig(k=3, n_perm=32, seed=1),
+        DedupConfig(k=3, n_perm=32, seed=1, sig_scheme="kperm-ref", minhash_bits=32),
+        DedupConfig(k=3, n_perm=32, seed=1, sig_scheme="oph"),
+    ],
+    ids=["kperm", "kperm-ref-32", "oph"],
+)
+def test_add_signatures_phash_is_union_signature(spark, cfg):
+    """With pHash, add_signatures signs the union of caption k-grams and
+    pHash windows: kperm takes the element-wise min of the two signatures,
+    OPH the min of the two raw bucket matrices, densified once."""
+    df = spark.createDataFrame(PH_ROWS, "image_id string, caption string, phash long")
+    got = {r["image_id"]: r["sig"] for r in add_signatures(df, cfg).collect()}
+    texts = pd.Series([r[1] for r in PH_ROWS])
+    wins = phash_window_hashes(np.array([r[2] or 0 for r in PH_ROWS], dtype=np.int64))
+    if cfg.sig_scheme == "oph":
+        flat, bounds, _, _ = series_grams(texts, cfg.k)
+        idx, lens = ragged_valid_indices(bounds)
+        cap = oph_raw(flat[idx], lens, cfg.n_perm, cfg.seed)
+        img_lens = np.full(len(PH_ROWS), wins.shape[1], dtype=np.int64)
+        img = oph_raw(wins.reshape(-1), img_lens, cfg.n_perm, cfg.seed)
+        want = oph_densify(np.minimum(cap, img), cfg.n_perm, cfg.seed)
+    else:
+        if cfg.sig_scheme == "kperm-ref":
+            a, b = ref_permutations(cfg.n_perm, cfg.seed)
+            flat, bounds, _, _ = series_grams(texts, cfg.k, lambda w: xxh64_windows(w, 0))
+            flat, wins = flat % np.uint64(MERSENNE_31), wins % np.uint64(MERSENNE_31)
+            vmask = 0xFFFFFFFF
+        else:
+            a, b = generate_permutations(cfg.n_perm, cfg.seed)
+            flat, bounds, _, _ = series_grams(texts, cfg.k)
+            vmask = None
+        want = np.minimum(
+            minhash_segments(flat, bounds, a, b, vmask=vmask),
+            minhash_fixed(wins, a, b, vmask=vmask),
+        )
+    for i, row in enumerate(PH_ROWS):
+        assert got[row[0]] == list(want[i].astype(np.int64)), f"row {i}"
+
+
+def test_phash_signature_is_one_udf_pass(spark):
+    """kperm with pHash signs in ONE Python UDF call: no second UDF for the
+    pHash channel and no JVM zip_with merge."""
+    cfg = DedupConfig(k=3, n_perm=32, seed=1)
+    df = spark.createDataFrame(PH_ROWS, "image_id string, caption string, phash long")
+    plan = add_signatures(df, cfg)._jdf.queryExecution().optimizedPlan().toString()
+    assert "zip_with" not in plan
+    assert len(set(re.findall(r"pythonUDF\d+#\d+", plan))) == 1, plan
 
 
 def test_minhash_similarity_expr(spark):

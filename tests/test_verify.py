@@ -1,11 +1,9 @@
 """Verification stage semantics (dna_benchmark.h:197-225 + graft paths)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from lshdedup.config import DedupConfig
 from lshdedup.minhash import add_signatures
-from lshdedup.simhash import simhash_udf
 from lshdedup.verify import longest_common_substring_ratio, verify_pairs
 
 
@@ -66,11 +64,9 @@ def test_verify_simhash_channel(spark):
     df = spark.createDataFrame(
         [("a", base, 0), ("b", near, 1 << 30)], ["image_id", "caption", "phash"]
     )
-    docs = add_signatures(df, cfg).withColumn("simhash", simhash_udf(cfg)(F.col("caption")))
+    docs = add_signatures(df, cfg)
     pairs = spark.createDataFrame([("a", "b")], ["id_a", "id_b"])
-    got = verify_pairs(
-        pairs, docs, cfg, phash_col=None, simhash_col="simhash"
-    ).first()
+    got = verify_pairs(pairs, docs, cfg, phash_col=None).first()
     # jaccard < 0.95 but simhash hamming small → near-exact channel fires
     assert got["jaccard"] < 0.95
     assert got["simhash_hamming"] <= 8
