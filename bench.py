@@ -24,6 +24,15 @@ import time
 
 from pyspark.sql import functions as F
 
+from lshdedup.config import DedupConfig
+
+# the image_dedup leaf's configuration; the scaling runs and
+# bench_extra.py --pipeline-repeat use the same one
+IMAGE_DEDUP_CFG = DedupConfig(
+    threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
+    sig_scheme="oph",
+)
+
 
 def membership_digest(clusters) -> int:
     """Order-free digest of cluster membership: ``bit_xor`` of
@@ -37,7 +46,6 @@ def membership_digest(clusters) -> int:
 
 
 def run_bench(sf_dir: str, cpus: int, n_images: int | None = None) -> dict:
-    from lshdedup.config import DedupConfig
     from lshdedup.pipeline import dedup_pipeline
     from lshdedup.session import get_spark
     from lshdedup.synth import SynthConfig, synth_corpus
@@ -66,10 +74,7 @@ def run_bench(sf_dir: str, cpus: int, n_images: int | None = None) -> dict:
     # materialize input once so we time the pipeline, not the generator
     corpus = corpus.persist()
     n_actual = corpus.count()
-    cfg = DedupConfig(
-        threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
-        shuffle_partitions=max(cpus, 16), sig_scheme="oph",
-    )
+    cfg = IMAGE_DEDUP_CFG
     t0 = time.perf_counter()
     res = dedup_pipeline(spark, corpus, cfg)
     n_clusters = res.clusters.select("cluster_id").distinct().count()
@@ -201,7 +206,6 @@ def run_pipeline_only(cpus: int, n_images: int, input_path: str | None = None) -
     parallelism on one machine, identical input and partitioning)."""
     import time as _time
 
-    from lshdedup.config import DedupConfig
     from lshdedup.pipeline import dedup_pipeline
     from lshdedup.session import get_spark
     from lshdedup.synth import SynthConfig, synth_corpus
@@ -222,10 +226,7 @@ def run_pipeline_only(cpus: int, n_images: int, input_path: str | None = None) -
             spark, SynthConfig(n_rows=n_images), partitions=128
         ).persist()
     n = corpus.count()
-    cfg = DedupConfig(
-        threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
-        sig_scheme="oph",
-    )
+    cfg = IMAGE_DEDUP_CFG
     t0 = _time.perf_counter()
     res = dedup_pipeline(spark, corpus, cfg)
     n_clusters = res.clusters.select("cluster_id").distinct().count()
@@ -346,7 +347,6 @@ def run_slice_worker(cpus: int) -> None:
 
     from pyspark.sql import functions as F  # noqa: F811 (worker subprocess)
 
-    from lshdedup.config import DedupConfig
     from lshdedup.pipeline import dedup_pipeline
     from lshdedup.session import get_spark
 
@@ -360,10 +360,7 @@ def run_slice_worker(cpus: int) -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    cfg = DedupConfig(
-        threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
-        sig_scheme="oph",
-    )
+    cfg = IMAGE_DEDUP_CFG
     print(json.dumps({"ready": True, "cpus": cpus}), flush=True)
     for line in sys.stdin:
         line = line.strip()

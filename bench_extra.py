@@ -96,7 +96,7 @@ def pipeline_repeat(n_images: int, reps: int, cpus: int) -> dict:
     clearing caches between runs, with per-run wall + steal.  Run this for
     variant A, switch the code (or flag), run again — medians of the warm
     runs compare variants without paying JVM/window drift between them."""
-    from lshdedup.config import DedupConfig
+    from bench import IMAGE_DEDUP_CFG
     from lshdedup.pipeline import dedup_pipeline
     from lshdedup.session import get_spark
     from lshdedup.synth import SynthConfig, synth_corpus
@@ -111,10 +111,7 @@ def pipeline_repeat(n_images: int, reps: int, cpus: int) -> dict:
         spark, SynthConfig(n_rows=n_images), partitions=max(cpus * 2, 8)
     ).persist()
     corpus.count()
-    cfg = DedupConfig(
-        threshold=0.7, n_perm=128, b=32, r=4, fp_weight=0.1, fn_weight=0.9,
-        shuffle_partitions=max(cpus, 16), sig_scheme="oph",
-    )
+    cfg = IMAGE_DEDUP_CFG
     runs = []
     for _ in range(reps):
         s0 = _steal_sec()

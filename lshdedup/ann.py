@@ -10,7 +10,7 @@ expressions, bit-stable against a sequential SQL oracle), random-
 hyperplane (SRP/SimHash) band buckets (vectorized numpy sign bits, then a
 band equi-join that replaces the O(n·q) cross product exactly as
 MinHash-LSH replaces all-pairs), or IVF coarse cells (k-means or
-seeded-row quantizer; in memory or from a cell-partitioned index at rest).
+seeded-row quantizer).
 """
 
 from __future__ import annotations
@@ -522,96 +522,4 @@ def embedding_near_dup_pairs(
         .withColumn("cosine", _cosine6("_va", "_vb", "_na", "_nb"))
         .filter(F.col("cosine") >= min_cosine)
         .select("id_a", "id_b", "cosine")
-    )
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    cid: str = "cid",
-    cvec: str = "cvec",
-    n_cells: int = 16,
-    corpus_spill: int = 1,
-    seed: int = 7,
-    n_rows: int | None = None,
-) -> np.ndarray:
-    """Materialize an IVF index AT REST: the corpus written as parquet
-    partitioned by coarse cell, plus the trained centroids and the index
-    parameters as sibling tables.  This is the 100 TB serving shape the
-    in-memory ivf_topk only simulates — once the corpus is
-    cell-partitioned on storage, a probe touches only its probed cells'
-    partitions (a partition-PRUNED scan, verified against the physical
-    plan in test_ann), so per-query I/O is ~corpus_spill·n_probe/n_cells
-    of the table instead of all of it.
-
-    Returns the trained centroid matrix.  Rows whose vector fails the
-    dim check get a null cell and land in the default partition; probes
-    never select it, matching ivf_topk's skip-not-crash semantics."""
-    spark = corpus.sparkSession
-    cent = train_ivf_centroids(
-        corpus, cid, cvec, dim, n_cells, seed=seed, n_rows=n_rows
-    )
-    spill = max(1, min(int(corpus_spill), n_cells))
-    cb = _corpus_cells(corpus, cvec, cent, spill)
-    cb.write.mode("overwrite").partitionBy("_cell").parquet(f"{path}/corpus")
-    spark.createDataFrame(
-        [(i, [float(x) for x in cent[i]]) for i in range(cent.shape[0])],
-        "cell_id int, centv array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(dim, int(cent.shape[0]), spill)],
-        "dim int, n_cells int, corpus_spill int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    return cent
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
-    n_probe: int = 4,
-) -> DataFrame:
-    """Serve top-k from a write_ivf_index index with a partition-pruned
-    corpus scan: query probe cells are computed against the stored
-    centroids, their DISTINCT union (bounded by n_cells — a driver-safe
-    collect) becomes a static IN-filter on the partition column, and
-    only those cell directories are read at all.  Candidate join and
-    exact re-rank are identical to ivf_topk; the pair dedup applies when
-    the index was written with corpus_spill > 1 (recorded in meta).
-
-    The query-side cell assignment runs twice (once for the bounded
-    distinct-cells collect, once inside the join) — one matmul per Arrow
-    batch each time.  For a large query set, persist `queries` upstream;
-    the pruning win (unprobed cell directories never read) dwarfs the
-    repeated assignment at any corpus:query ratio where IVF makes
-    sense."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cent = np.array(
-        [r["centv"] for r in sorted(cent_rows, key=lambda r: r["cell_id"])],
-        dtype=np.float64,
-    )
-    qb = _probe_cells(queries, qvec, cent, n_probe)
-    # n_queries·n_probe values collapse to <= n_cells distinct cells: a
-    # bounded driver intake that buys STATIC partition pruning (the scan
-    # lists only the probed directories; no job touches the rest)
-    cells = [
-        int(r["_cell"])
-        for r in qb.select("_cell").distinct().collect()
-        if r["_cell"] is not None
-    ]
-    cb = (
-        spark.read.parquet(f"{path}/corpus")
-        .filter(F.col("_cell").isin(cells))
-        .withColumn("_cn", norm_expr(F.col(cvec)))
-    )
-    return _rerank_topk(
-        qb.join(cb, "_cell"), k, qid, cid, qvec, cvec,
-        dedup=int(meta["corpus_spill"]) > 1,
     )

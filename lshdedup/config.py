@@ -32,7 +32,7 @@ class DedupConfig:
     minhash_bits: int = 64        # 32 = reference MinHashBits=32: element hash
                                   # folds % 2^31-1 [hash.h:52-60] AND signature
                                   # values mask & 0xFFFFFFFF per element
-                                  # [minhash.h:144-146]; consumed by minhash.py
+                                  # [minhash.h:144-146]; kperm/kperm-ref only
     sig_scheme: str = "kperm"     # "kperm"     — classic 128-perm, PCG64 table,
                                   #               FNV elements (documented deviation)
                                   # "kperm-ref" — BIT-EXACT reference parity:
@@ -62,7 +62,6 @@ class DedupConfig:
     verify_mode: str = "exact"    # "minhash" | "exact" | "exact+simhash";
                                   # under "exact+simhash" add_signatures
                                   # also writes the per-doc simhash column
-    simhash_max_hamming: int = 3
     lcs_min_ratio: float = 0.0    # >0 enables suffix-automaton LCS check,
                                   # behind a native gram screen (verify.py).
                                   # NOTE: pairs whose common substring
@@ -75,7 +74,13 @@ class DedupConfig:
     run_id: str = "run0"
     checkpoint_dir: Optional[str] = None
     shuffle_partitions: int = 32  # read by nothing; still accepted because
-                                  # bench.py and perfbench pass it
+                                  # perfbench passes it
+
+    def __post_init__(self):
+        # OPH signs without the 32-bit fold, so minhash_bits=32 would only
+        # change the checkpoint fingerprint, never a signature
+        if self.sig_scheme == "oph" and self.minhash_bits == 32:
+            raise ValueError("minhash_bits=32 has no effect under sig_scheme='oph'")
 
     def resolved(self, optimal) -> "DedupConfig":
         """Fill (b, r) via the optimizer if unset; returns a new config."""

@@ -6,7 +6,6 @@ DataFrame-level pair-set precision/recall used by the recall gate.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def precision_recall(n_found: int, n_truth: int, n_inter: int) -> tuple[float, float]:
@@ -47,14 +46,3 @@ def pair_set_metrics(found: DataFrame, truth: DataFrame) -> dict:
         "recall": r,
         "f1": f_score(p, r),
     }
-
-
-def percentile(df: DataFrame, col: str, p: float) -> float:
-    """GK-sketch approximate percentile (util.h:190-195 uses a GK stream
-    sketch; Spark's percentile_approx is the same family)."""
-    return df.select(F.percentile_approx(col, p).alias("q")).first()["q"]
-
-
-def mean(df: DataFrame, col: str) -> float:
-    """Parallel mean (util.h:198-205 parallel std::reduce → F.avg)."""
-    return df.select(F.avg(col).alias("m")).first()["m"]

@@ -20,7 +20,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -31,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lshdedup.codec import decode_image, decode_real, encode_image, phash64
+from lshdedup.codec import decode_image, decode_real, phash64
 
 IMAGE_FEATURES_SCHEMA = StructType(
     [
@@ -73,35 +72,6 @@ def image_features(df: DataFrame, id_col: str = "image_id") -> DataFrame:
             yield pd.DataFrame(rows, columns=IMAGE_FEATURES_SCHEMA.fieldNames())
 
     return df.select(id_col, "bytes", "fmt").mapInPandas(extract, IMAGE_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("image_id", StringType()),
-        StructField("bytes", BinaryType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("fmt", StringType()),
-    ]
-)
-
-
-def resize_images(df: DataFrame, target: int, id_col: str = "image_id") -> DataFrame:
-    """Block-sample resize to target×target, re-encoded lossless."""
-
-    def rsz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                px = _decode(bytes(data), fmt)
-                h, w = px.shape
-                ys = (np.arange(target) * h // target).clip(0, h - 1)
-                xs = (np.arange(target) * w // target).clip(0, w - 1)
-                out = px[np.ix_(ys, xs)]
-                rows.append((rid, bytearray(encode_image(out, "raw")), target, target, "raw"))
-            yield pd.DataFrame(rows, columns=RESIZED_SCHEMA.fieldNames())
-
-    return df.select(id_col, "bytes", "fmt").mapInPandas(rsz, RESIZED_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(

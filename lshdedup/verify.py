@@ -26,6 +26,8 @@ from lshdedup.simhash import hamming_expr
 # the native pre-LCS screen keeps a pair whose gram intersection is within
 # a factor of 1/LCS_SCREEN_SLACK of the length OR the containment bound
 LCS_SCREEN_SLACK = 4
+# a pHash or SimHash pair within this many differing bits is a near-dup
+MAX_HAMMING = 3
 
 
 def enrich_pairs(
@@ -135,7 +137,7 @@ def verify_pairs(
       minhash        — mh_sim >= threshold (the reference's own filter,
                        dna_benchmark.h:209-214)
       exact          — exact caption Jaccard >= threshold, OR image
-                       near-dup (phash hamming <= simhash_max_hamming)
+                       near-dup (phash hamming <= MAX_HAMMING)
       exact+simhash  — as exact, plus the near-exact caption channel
                        (simhash hamming) over ``docs``' ``simhash`` column,
                        which add_signatures writes under this mode
@@ -205,12 +207,12 @@ def verify_pairs(
     if use_phash:
         pre = pre | (
             hamming_expr(F.col(f"{phash_col}_a"), F.col(f"{phash_col}_b"))
-            <= cfg.simhash_max_hamming
+            <= MAX_HAMMING
         )
     if want_simhash:
         pre = pre | (
             hamming_expr(F.col("simhash_a"), F.col("simhash_b"))
-            <= cfg.simhash_max_hamming
+            <= MAX_HAMMING
         )
     if cfg.lcs_min_ratio > 0:
         # The LCS channel must NOT disable the prefilter (the
@@ -261,14 +263,14 @@ def verify_pairs(
             "phash_hamming",
             hamming_expr(F.col(f"{phash_col}_a"), F.col(f"{phash_col}_b")),
         )
-        dup = dup | (F.col("phash_hamming") <= cfg.simhash_max_hamming)
+        dup = dup | (F.col("phash_hamming") <= MAX_HAMMING)
         keep.append("phash_hamming")
     if want_simhash:
         out = out.withColumn(
             "simhash_hamming",
             hamming_expr(F.col("simhash_a"), F.col("simhash_b")),
         )
-        dup = dup | (F.col("simhash_hamming") <= cfg.simhash_max_hamming)
+        dup = dup | (F.col("simhash_hamming") <= MAX_HAMMING)
         keep.append("simhash_hamming")
     if cfg.lcs_min_ratio > 0:
         out = out.withColumn(

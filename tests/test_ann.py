@@ -253,45 +253,6 @@ def test_ivf_seeded_recall_subset_and_determinism(spark):
     }
 
 
-def test_ivf_index_at_rest_partition_pruned(spark, tmp_path):
-    """write_ivf_index + ivf_topk_indexed: the serving shape.  Results
-    must equal the in-memory ivf_topk on identical data and seed (same
-    training sample → same centroids → same candidates), and the corpus
-    scan must be PARTITION-PRUNED — the physical plan's PartitionFilters
-    carries the _cell IN-list, so unprobed cell directories are never
-    read.  Covers spill=1 and the spill=2 dedup metadata round-trip."""
-    from pyspark.sql import functions as F
-
-    from lshdedup.ann import ivf_topk, ivf_topk_indexed, write_ivf_index
-
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qvec")
-    )
-    c = e.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cvec")
-    )
-    for spill in (1, 2):
-        path = str(tmp_path / f"ivf_s{spill}")
-        write_ivf_index(c, path, dim=64, n_cells=8, corpus_spill=spill)
-        served = ivf_topk_indexed(spark, path, q, k=5, n_probe=3)
-        plan = served._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "_cell" in plan
-        got = {
-            (r["qid"], r["cid"], r["cosine"], r["rank"])
-            for r in served.collect()
-        }
-        mem = {
-            (r["qid"], r["cid"], r["cosine"], r["rank"])
-            for r in ivf_topk(
-                q, c, k=5, dim=64, n_cells=8, n_probe=3, corpus_spill=spill
-            ).collect()
-        }
-        assert got == mem
-
-
 def test_rerank_dedup_only_where_pairs_can_repeat(spark):
     """The re-rank core's (qid, cid) dedup is one Aggregate in the
     optimized plan exactly where the candidate join can repeat a pair:

@@ -1,4 +1,4 @@
-"""DNA packed shingling (k_shingles.h:106-221) + io sources (io.h)."""
+"""DNA packed shingling (k_shingles.h:106-221)."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -11,7 +11,6 @@ from lshdedup.dna import (
     dna_shingles_expr,
     encode_dna,
 )
-from lshdedup.io import documents_from_text, reads_from_fastq
 
 
 def test_encode_decode_roundtrip():
@@ -85,64 +84,3 @@ def test_dna_dup_graph_vs_bruteforce(spark):
     }
     assert got == oracle
     assert len(oracle) >= 5  # the planted mutants
-
-
-def test_documents_from_text(spark, tmp_path):
-    p = tmp_path / "docs.txt"
-    p.write_text("alpha\nbeta\ngamma\n")
-    rows = documents_from_text(spark, str(p)).collect()
-    assert [(r["doc_id"], r["text"]) for r in sorted(rows, key=lambda r: r["doc_id"])] == [
-        (0, "alpha"),
-        (1, "beta"),
-        (2, "gamma"),
-    ]
-
-
-def test_reads_from_fastq(spark, tmp_path):
-    """Every 4th line starting at 1 is a sequence (io.h:48-62)."""
-    p = tmp_path / "reads.fastq"
-    p.write_text("@r0\nATCG\n+\nIIII\n@r1\nGGCC\n+\nIIII\n")
-    rows = reads_from_fastq(spark, str(p)).collect()
-    assert [(r["read_id"], r["seq"]) for r in sorted(rows, key=lambda r: r["read_id"])] == [
-        (0, "ATCG"),
-        (1, "GGCC"),
-    ]
-
-
-def test_dense_ids_independent_of_split_count(spark, tmp_path):
-    """Ids must not change with the file-split size (the pre-fix global
-    window was also split-stable but funneled everything through one task;
-    this pins the per-partition-offset rewrite to the same assignment)."""
-    from lshdedup.io import documents_from_text
-
-    p = tmp_path / "many_lines.txt"
-    lines = [f"line number {i} with some padding text" for i in range(3000)]
-    p.write_text("\n".join(lines) + "\n")
-
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024))
-        small = {r["doc_id"]: r["text"]
-                 for r in documents_from_text(spark, str(p)).collect()}
-        # more than one SCAN split actually exercised (the output may be
-        # AQE-coalesced, which is fine — the ids must not depend on it)
-        assert spark.read.text(str(p)).rdd.getNumPartitions() > 1
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-        big = {r["doc_id"]: r["text"]
-               for r in documents_from_text(spark, str(p)).collect()}
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    assert small == big
-    assert [small[i] for i in range(3000)] == lines
-
-
-def test_dense_ids_plan_has_no_global_exchange(spark, tmp_path):
-    """The id-assignment plan must not contain a single-partition global
-    sort (Exchange SinglePartition) — the 100 TB bottleneck the rewrite
-    removes."""
-    from lshdedup.io import documents_from_text
-
-    p = tmp_path / "f.txt"
-    p.write_text("\n".join(f"row {i}" for i in range(50)) + "\n")
-    plan = documents_from_text(spark, str(p))._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan, plan

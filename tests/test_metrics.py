@@ -2,7 +2,7 @@
 
 import pytest
 
-from lshdedup.metrics import f_score, mean, pair_set_metrics, percentile, precision_recall
+from lshdedup.metrics import f_score, pair_set_metrics, precision_recall
 
 
 def test_empty_set_conventions():
@@ -25,9 +25,3 @@ def test_pair_set_metrics(spark):
     truth = spark.createDataFrame([("a", "b"), ("e", "f")], ["id_a", "id_b"])
     m = pair_set_metrics(found, truth)
     assert m["precision"] == 0.5 and m["recall"] == 0.5 and m["n_inter"] == 1
-
-
-def test_percentile_and_mean(spark):
-    df = spark.createDataFrame([(float(i),) for i in range(1, 101)], ["v"])
-    assert mean(df, "v") == pytest.approx(50.5)
-    assert percentile(df, "v", 0.9) == pytest.approx(90.0, abs=2.0)

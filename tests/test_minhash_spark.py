@@ -59,6 +59,18 @@ def test_signature_partitioning_invariance(spark):
     assert s1 == s2
 
 
+def test_oph_rejects_32_bit_minhash():
+    """OPH has no 32-bit fold, so minhash_bits=32 would only move the
+    checkpoint fingerprint; the kperm schemes still take it."""
+    import __spark_entry__ as entry_mod
+
+    with pytest.raises(ValueError, match="oph"):
+        DedupConfig(sig_scheme="oph", minhash_bits=32)
+    DedupConfig(sig_scheme="kperm", minhash_bits=32)
+    assert entry_mod.REF_CFG.sig_scheme == "kperm-ref"
+    assert entry_mod.REF_CFG.minhash_bits == 32
+
+
 PH_ROWS = [
     ("a", "some caption text", 123456789),
     ("b", "other caption here", -42),

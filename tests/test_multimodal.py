@@ -1,10 +1,9 @@
-"""Multimodal binary-column plumbing (decode/feature/resize; stubs gated)."""
+"""Multimodal binary-column plumbing (decode/feature; stubs gated)."""
 
 import pytest
 
-from lshdedup.multimodal import image_features, resize_images, sample_video_frames
+from lshdedup.multimodal import image_features, sample_video_frames
 from lshdedup.synth import SynthConfig, synth_corpus
-from lshdedup.codec import decode_image
 
 
 def test_image_features(spark):
@@ -18,17 +17,6 @@ def test_image_features(spark):
         assert feat["w"] == 16 and feat["h"] == 16
         assert 0.0 <= feat["mean_luma"] <= 255.0
         assert feat["phash"] == src[rid]["phash"]  # recompute matches stored
-
-
-def test_resize_images(spark):
-    scfg = SynthConfig(n_rows=8, img_size=16)
-    df = synth_corpus(spark, scfg)
-    out = resize_images(df, target=8).collect()
-    assert len(out) == 8
-    for r in out:
-        px = decode_image(bytes(r["bytes"]))
-        assert px.shape == (8, 8)
-        assert r["fmt"] == "raw"
 
 
 def test_image_features_decodes_real_png(spark):

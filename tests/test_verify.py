@@ -4,7 +4,7 @@ import pytest
 
 from lshdedup.config import DedupConfig
 from lshdedup.minhash import add_signatures
-from lshdedup.verify import longest_common_substring_ratio, verify_pairs
+from lshdedup.verify import MAX_HAMMING, longest_common_substring_ratio, verify_pairs
 
 
 def test_lcs_ratio():
@@ -46,6 +46,23 @@ def test_verify_exact_mode(spark):
     assert ("a", "d") not in got or got[("a", "d")]["is_dup"] is False
 
 
+@pytest.mark.parametrize("bits,is_dup", [(3, True), (4, False)])
+def test_phash_hamming_boundary(spark, bits, is_dup):
+    """The image channel accepts a pair up to MAX_HAMMING differing pHash
+    bits and no further; an unverifiable pair may be pre-pruned."""
+    cfg = DedupConfig(k=3, n_perm=64, threshold=0.9, use_phash=True)
+    docs = _docs(spark, cfg, [
+        ("a", "shared caption text here", 0),
+        ("b", "nothing in common whatsoever", (1 << bits) - 1),
+    ])
+    pairs = spark.createDataFrame([("a", "b")], ["id_a", "id_b"])
+    got = verify_pairs(pairs, docs, cfg).collect()
+    if is_dup:
+        assert [(r["phash_hamming"], r["is_dup"]) for r in got] == [(bits, True)]
+    else:
+        assert [(r["phash_hamming"], r["is_dup"]) for r in got] in ([], [(bits, False)])
+
+
 def test_verify_minhash_mode(spark):
     cfg = DedupConfig(k=3, n_perm=128, threshold=0.5, verify_mode="minhash", use_phash=False)
     docs = _docs(spark, cfg, [("a", "abcdefgh abcdefgh", 0), ("b", "abcdefgh abcdefgh", 0)])
@@ -56,11 +73,10 @@ def test_verify_minhash_mode(spark):
 
 def test_verify_simhash_channel(spark):
     cfg = DedupConfig(
-        k=3, n_perm=64, threshold=0.95, verify_mode="exact+simhash",
-        simhash_max_hamming=8, use_phash=False,
+        k=3, n_perm=64, threshold=0.95, verify_mode="exact+simhash", use_phash=False,
     )
     base = "the quick brown fox jumps over the lazy dog again and again " * 3
-    near = base.replace("dog", "cat")
+    near = base.replace("fox", "cat", 1)
     df = spark.createDataFrame(
         [("a", base, 0), ("b", near, 1 << 30)], ["image_id", "caption", "phash"]
     )
@@ -69,7 +85,7 @@ def test_verify_simhash_channel(spark):
     got = verify_pairs(pairs, docs, cfg, phash_col=None).first()
     # jaccard < 0.95 but simhash hamming small → near-exact channel fires
     assert got["jaccard"] < 0.95
-    assert got["simhash_hamming"] <= 8
+    assert got["simhash_hamming"] <= MAX_HAMMING
     assert got["is_dup"] is True
 
 
