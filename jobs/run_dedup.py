@@ -14,8 +14,9 @@ Local smoke (this sandbox):
     python jobs/run_dedup.py --synthetic 5000 --output /tmp/clusters
 
 Resumability: rerunning with the same --checkpoint-dir/--run-id/config
-skips completed stages (checkpoint.py); metrics + per-partition lineage
-land under <checkpoint-dir>/<run-id>/metrics.jsonl.
+skips completed stages (checkpoint.py) and launches no Spark job before the
+output write; metrics + lineage (rows per written file, read from the
+parquet footers) land under <checkpoint-dir>/<run-id>/metrics.jsonl.
 """
 
 from __future__ import annotations
@@ -67,19 +68,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", help="override master (default: spark-submit's)")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from lshdedup.pipeline import dedup_pipeline
+    from lshdedup.session import get_spark
 
-    builder = SparkSession.builder.appName(f"lshdedup-{args.run_id}")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name=f"lshdedup-{args.run_id}", master=args.master)
 
     if args.synthetic:
         from lshdedup.synth import SynthConfig, synth_corpus

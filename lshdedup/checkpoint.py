@@ -10,13 +10,19 @@ skipped on rerun — resumability is table-existence, not driver state, so a
 killed job resumes mid-pipeline.
 
 Every completed stage appends one JSON metrics line (rows, wall seconds,
-per-partition row counts = lineage, config hash) to
-``<checkpoint_dir>/<run_id>/metrics.jsonl``; ``StageRunner.metrics_df``
-reads that file back as a DataFrame.  A resumed stage adds no line.
+config hash, and the lineage: rows per written file, keyed by the file's
+``part-NNNNN`` task number) to ``<checkpoint_dir>/<run_id>/metrics.jsonl``;
+``StageRunner.metrics_df`` reads that file back as a DataFrame.  The counts
+come from the footers of the parquet files the write just committed, so no
+Spark job reads the stage back to count it.  The success marker stores the
+stage's schema, and the stage is read back (now and on resume) with that
+schema, so a resumed stage launches no Spark job; a marker without a schema
+counts as incomplete.  A resumed stage adds no metrics line.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -24,13 +30,15 @@ import time
 from dataclasses import asdict
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lshdedup.config import DedupConfig
 
 # where a run is stored, and a knob nothing reads: not in the fingerprint
 EXECUTION_FIELDS = ("run_id", "checkpoint_dir", "shuffle_partitions")
+MARKER = "_LSHDEDUP_DONE.json"
 
 
 class StageRunner:
@@ -55,31 +63,42 @@ class StageRunner:
     def _path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
-    def _complete(self, stage: str) -> bool:
-        p = self._path(stage)
-        marker = os.path.join(p, "_LSHDEDUP_DONE.json")
+    def _stored_schema(self, stage: str) -> StructType | None:
+        """The schema in the stage's marker, or None unless the marker
+        exists, matches this config and holds a schema."""
+        marker = os.path.join(self._path(stage), MARKER)
         if not os.path.exists(marker):
-            return False
+            return None
         with open(marker) as fh:
             meta = json.load(fh)
-        return meta.get("cfg_hash") == self.cfg_hash
+        if meta.get("cfg_hash") != self.cfg_hash or "schema" not in meta:
+            return None
+        return StructType.fromJson(meta["schema"])
 
-    def _write(self, stage: str, df: DataFrame) -> None:
+    def _write(self, stage: str, df: DataFrame) -> dict[int, int]:
+        """Write the stage; rows per ``part-NNNNN`` task number, read from
+        the committed files' parquet footers on the driver."""
         df.write.mode("overwrite").parquet(self._path(stage))
+        rows: dict[int, int] = {}
+        for f in sorted(glob.glob(os.path.join(self._path(stage), "part-*.parquet"))):
+            task = int(os.path.basename(f).split("-")[1])
+            rows[task] = rows.get(task, 0) + pq.read_metadata(f).num_rows
+        return rows
 
-    def _read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
+    def _read(self, stage: str, schema: StructType) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self._path(stage))
 
     # -- the stage wrapper --
     def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Run (or resume) one stage; returns the materialized output."""
-        if self._complete(name):
+        schema = self._stored_schema(name)
+        if schema is not None:
             self.events.append({"stage": name, "resumed": True})
-            return self._read(name)
+            return self._read(name, schema)
         t0 = time.perf_counter()
         out = fn()
-        self._write(name, out)
-        result = self._read(name)
+        parts = self._write(name, out)
+        result = self._read(name, out.schema)
         wall = time.perf_counter() - t0
         meta: dict = {
             "stage": name,
@@ -87,17 +106,12 @@ class StageRunner:
             "wall_sec": round(wall, 3),
             "cfg_hash": self.cfg_hash,
             "run_id": self.cfg.run_id,
+            "rows": sum(parts.values()),
+            "n_partitions": len(parts),
+            "partition_rows": parts,
         }
-        parts = (
-            result.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        meta["rows"] = int(sum(r["rows"] for r in parts))
-        meta["n_partitions"] = len(parts)
-        meta["partition_rows"] = {int(r["partition"]): int(r["rows"]) for r in parts}
-        with open(os.path.join(self._path(name), "_LSHDEDUP_DONE.json"), "w") as fh:
-            json.dump(meta, fh)
+        with open(os.path.join(self._path(name), MARKER), "w") as fh:
+            json.dump({**meta, "schema": out.schema.jsonValue()}, fh)
         with open(os.path.join(self.root, "metrics.jsonl"), "a") as fh:
             fh.write(json.dumps(meta) + "\n")
         self.events.append(meta)
@@ -110,8 +124,6 @@ class StageRunner:
         if os.path.exists(path):
             with open(path) as fh:
                 rows = [json.loads(line) for line in fh if line.strip()]
-        if not rows:
-            return self.spark.createDataFrame([], "stage string, wall_sec double, rows long")
         return self.spark.createDataFrame(
             [
                 (

@@ -89,14 +89,15 @@ class StreamingDedup:
     def _mark_done(self, batch_id: int) -> None:
         open(self._path(f"_batch_{batch_id}_done"), "w").close()
 
-    def _maybe_compact(self, batch_id: int) -> None:
-        """Rewrite the docs store as the one partition ``batch_id=N`` (N the
-        last batch it covers), in at most one file per core.  Crash-safe:
-        written to a temp dir, then swapped in with two renames (recovery
-        in _read_state)."""
+    def _maybe_compact(self, batch_id: int, schema: StructType) -> None:
+        """Rewrite the docs store (read with ``schema``, so no inference
+        job runs) as the one partition ``batch_id=N`` (N the last batch it
+        covers), in at most one file per core.  Crash-safe: written to a
+        temp dir, then swapped in with two renames (recovery in
+        _read_state)."""
         if self.compact_every <= 0 or (batch_id + 1) % self.compact_every:
             return
-        df = self._read_state("docs")
+        df = self._read_state("docs", schema)
         path = self._path("docs")
         tmp, old = path + "_tmp", path + "_old"
         for p in (tmp, old):
@@ -122,9 +123,8 @@ class StreamingDedup:
         bands = explode_bands(signed, idc, "sig", cfg)
         cands, _ = candidate_pairs(bands, idc, cfg)
         docs = signed
-        store = self._read_state(
-            "docs", StructType(signed.schema.fields + [StructField("batch_id", LongType())])
-        )
+        docs_schema = StructType(signed.schema.fields + [StructField("batch_id", LongType())])
+        store = self._read_state("docs", docs_schema)
         if store is not None:
             prior = store.filter(F.col("batch_id") < batch_id).drop("batch_id")
             cands = cands.unionByName(query_candidates(
@@ -149,7 +149,7 @@ class StreamingDedup:
         for df in persisted:
             df.unpersist()
         self._mark_done(batch_id)
-        self._maybe_compact(batch_id)
+        self._maybe_compact(batch_id, docs_schema)
 
     def start(self, stream: DataFrame, checkpoint: str | None = None):
         writer = stream.writeStream.foreachBatch(self.process_batch).option(
